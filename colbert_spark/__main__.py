@@ -87,7 +87,7 @@ def _cmd_compact(args) -> int:
     spark = get_spark("colbert-compact")
     stats = compact_index(
         spark, args.index, preserve_epochs=not args.merge_epochs,
-        expunge_deletes=args.expunge_deletes, streaming=args.streaming,
+        expunge_deletes=args.expunge_deletes,
     )
     print(json.dumps(stats))
     return 0
@@ -342,14 +342,6 @@ def main(argv: list[str] | None = None) -> int:
         dest="expunge_deletes",
         help="physically drop tombstoned docs' postings and recompute "
         "collection statistics (forceMergeDeletes; implies --merge-epochs)",
-    )
-    cp.add_argument(
-        "--streaming",
-        action=argparse.BooleanOptionalAction,
-        default=None,
-        help="force (or forbid, --no-streaming) the bounded-memory sorted "
-        "streaming kernel; default auto-selects by estimated per-task "
-        "decoded footprint",
     )
     cp.set_defaults(fn=_cmd_compact)
 

@@ -43,6 +43,7 @@ but the merge is a Spark shuffle, not a rank-0 gather.
 
 from __future__ import annotations
 
+import json
 import os
 
 import numpy as np
@@ -588,6 +589,18 @@ def _seg_file_schema(with_pos: bool = False):
     return schema
 
 
+def commit_json(path: str, obj) -> None:
+    """Atomically replace `path` with `obj` as JSON: write a dot-tmp file
+    beside it, then `os.replace` — a reader (or a crash) sees the old file
+    or the new one, never a torn one. Every stats.json / epoch_stats commit
+    goes through here."""
+    d, name = os.path.split(path)
+    tmp = os.path.join(d, f".{name}.tmp")
+    with open(tmp, "w") as f:
+        json.dump(obj, f)
+    os.replace(tmp, path)
+
+
 def _write_segment_files(out: pd.DataFrame, seg_dir: str, epoch: int = 0) -> None:
     """TASK-LOCAL segment sink: each encode task writes its own
     `bucket=<b>/tshard=<t>/p<partition>.parquet` files with pyarrow and
@@ -796,7 +809,6 @@ def build_index(
     shuffle, so no recomputation happens. Idempotent because each bucket's
     segment files are written exactly once (parquet dir partition append).
     """
-    import json
     import time
 
     phases: dict[str, float] = {}
@@ -962,13 +974,11 @@ def build_index(
 
     manifest_path = os.path.join(index_dir, "manifest")
     os.makedirs(index_dir, exist_ok=True)
-    with open(os.path.join(index_dir, "stats.json"), "w") as f:
-        json.dump(stats, f)
+    commit_json(os.path.join(index_dir, "stats.json"), stats)
     # immutable per-epoch snapshot (e{k} = state as of epoch k's commit):
     # the base of the index's time-travel surface (IndexSearcher as_of_epoch)
     os.makedirs(os.path.join(index_dir, "epoch_stats"), exist_ok=True)
-    with open(os.path.join(index_dir, "epoch_stats", "e0.json"), "w") as f:
-        json.dump(stats, f)
+    commit_json(os.path.join(index_dir, "epoch_stats", "e0.json"), stats)
 
     # plain join: AQE converts it to broadcast while the vocabulary is small
     # and falls back to a skew-split shuffle join at web-scale vocabularies.
@@ -1151,7 +1161,6 @@ def append_index(
     float-summation order (appended vocabulary ids break the lexicographic
     id order, shifting sums by ≤1 ulp per term).
     """
-    import json
     import time
 
     t_start = time.perf_counter()
@@ -1482,10 +1491,6 @@ def append_index(
     # written BEFORE the commit pointer: a crash in between leaves stats.json
     # unmoved, so the retried append re-runs and rewrites it byte-identically
     os.makedirs(os.path.join(index_dir, "epoch_stats"), exist_ok=True)
-    with open(os.path.join(index_dir, "epoch_stats", f"e{epoch}.json"), "w") as f:
-        json.dump(stats, f)
-    tmp_stats = os.path.join(index_dir, ".stats.json.tmp")
-    with open(tmp_stats, "w") as f:
-        json.dump(stats, f)
-    os.replace(tmp_stats, os.path.join(index_dir, "stats.json"))
+    commit_json(os.path.join(index_dir, "epoch_stats", f"e{epoch}.json"), stats)
+    commit_json(os.path.join(index_dir, "stats.json"), stats)
     return stats

@@ -211,6 +211,36 @@ def decode_block(buf: bytes, prefixed: bool = True) -> np.ndarray:
     return vb_decode(buf[1:])
 
 
+def decode_blocks(bufs, prefixed: bool = True) -> np.ndarray:
+    """Decode a sequence of block payloads into one int64 array, equal to
+    `np.concatenate([decode_block(b, prefixed) for b in bufs])`. Varbyte is
+    self-delimiting, so every varbyte body decodes in ONE vectorized pass
+    over the joined bytes; only PForDelta bodies decode block by block."""
+    bufs = list(bufs)
+    if not prefixed:
+        return vb_decode(b"".join(bufs))
+    raw = np.frombuffer(b"".join(bufs), dtype=np.uint8)
+    lens = np.fromiter(map(len, bufs), dtype=np.int64, count=len(bufs))
+    starts = np.cumsum(lens) - lens
+    is_pfor = raw[starts] == CODEC_PFOR
+    blk = np.repeat(np.arange(len(lens)), lens)
+    vb = ~is_pfor[blk]
+    vb[starts] = False  # codec tag bytes
+    if not is_pfor.any():
+        return vb_decode(raw[vb])
+    # values per block: varbyte terminators, or the pfor header's n (the
+    # byte after the tag and w)
+    counts = np.bincount(blk[vb & (raw < 0x80)], minlength=len(lens))
+    counts[is_pfor] = raw[starts[is_pfor] + 2]
+    in_vb = np.repeat(~is_pfor, counts)
+    out = np.empty(len(in_vb), dtype=np.int64)
+    out[in_vb] = vb_decode(raw[vb])
+    out[~in_vb] = np.concatenate(
+        [pfor_decode(bufs[i][1:]) for i in np.flatnonzero(is_pfor)]
+    )
+    return out
+
+
 def encode_block_payloads(
     values: np.ndarray, block_starts: np.ndarray, block_ends: np.ndarray
 ) -> list[bytes]:

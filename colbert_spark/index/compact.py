@@ -36,14 +36,21 @@ Epoch semantics (time-travel, `IndexSearcher(as_of_epoch=k)`):
     a fresh build over the survivors — see `compact_index`'s docstring
     and index/delete.py for the maxDoc/numDocs contract.
 
+Kernel: one bounded-memory pass, `_compact_partition_streaming`. Block
+rows are shuffled by (bucket, tshard) and JVM-sorted within partitions;
+the kernel cuts them into `_slab_bounds` slabs of whole (bucket, term)
+groups, re-encodes slab by slab and appends to one parquet file per cell,
+so per-task memory is O(slab + one Arrow batch) at any partition size.
+
 Commit protocol: the kernel writes a complete new segment tree under
 `segments_c<gen>/` (task-local atomic renames, deterministic content ⇒
-crash-rerun rewrites identical files), epoch snapshots are repointed, and
-the single atomic `stats.json` replace flips the live `seg_dir` pointer
-last — a crash anywhere earlier leaves the old tree live and intact. The
-manifest is untouched: its per-bucket posting counts and term watermarks
-remain true (compaction moves no postings across buckets); only its
-n_blocks column describes the pre-compaction layout.
+crash-rerun rewrites identical files), epoch snapshots are repointed (a
+full merge rewrites e0 and drops e1+ only after the flip), and the single
+atomic `stats.json` replace (`commit_json`) flips the live `seg_dir`
+pointer — a crash anywhere earlier leaves the old tree live and intact.
+The manifest is untouched: its per-bucket posting counts and term
+watermarks remain true (compaction moves no postings across buckets); only
+its n_blocks column describes the pre-compaction layout.
 """
 
 from __future__ import annotations
@@ -59,9 +66,9 @@ from pyspark.sql import SparkSession
 from colbert_spark.index.build import (
     DEFAULT_TSHARDS,
     _encode_posting_blocks,
-    _write_segment_files,
+    commit_json,
 )
-from colbert_spark.index.codec import decode_block
+from colbert_spark.index.codec import decode_blocks
 
 COMPACT_SUMMARY_SCHEMA = (
     "bucket long, term_id long, n_blocks long, n_postings long, cf long"
@@ -83,40 +90,31 @@ def _reencode_rows(
 ):
     """Decode a slab of block rows, regroup postings per (term, bucket
     [, epoch]), re-encode full blocks. The slab may hold any number of
-    (bucket, term) groups but must hold each group's blocks WHOLE — the
-    partition-at-once kernel satisfies this trivially, the streaming kernel
-    by slicing at group boundaries. Returns (outs, cf) where `outs` is a
+    (bucket, term) groups but must hold each group's blocks WHOLE (or one
+    block-row sub-chunk of a group heavier than the slab budget, see
+    `_slab_bounds`) — so every block of a (term, bucket, epoch) run is
+    re-encoded in one call. Returns (outs, cf) where `outs` is a
     list of (epoch, encoded block frame) and `cf` the per-(bucket, term)
     live Σtf partials the expunge path folds into the rewritten dictionary."""
     has_pos = "pos_bytes" in pdf.columns
-    # decode all payloads (maintenance path: per-block Python is fine —
-    # the hot paths stay vectorized)
-    docs_l, tfs_l, dls_l, pos_l = [], [], [], []
-    for i, (db, tb, lb) in enumerate(
-        zip(pdf["doc_bytes"], pdf["tf_bytes"], pdf["dl_bytes"])
-    ):
-        docs_l.append(np.cumsum(decode_block(db, prefixed_in)))
-        tf_blk = decode_block(tb, prefixed_in)
-        tfs_l.append(tf_blk)
-        dls_l.append(decode_block(lb, prefixed_in))
-        if has_pos:
-            # positions: per-posting-reset deltas → absolute (the block's
-            # tf column delimits each posting's occurrence run)
-            deltas = decode_block(pdf["pos_bytes"].iat[i], prefixed_in)
-            cs = np.cumsum(deltas)
-            offs = np.zeros(len(tf_blk) + 1, dtype=np.int64)
-            np.cumsum(tf_blk, out=offs[1:])
-            starts = offs[:-1]
-            base = cs[starts] - deltas[starts]
-            pos_l.append(cs - np.repeat(base, tf_blk))
     ns = pdf["n"].to_numpy(np.int64)
-    docs = np.concatenate(docs_l)
-    tfs = np.concatenate(tfs_l)
-    dls = np.concatenate(dls_l)
+    # one vectorized decode per column over the whole slab; doc deltas
+    # restart at each block's first (absolute) doc id
+    d = decode_blocks(pdf["doc_bytes"], prefixed_in)
+    cs = np.cumsum(d)
+    first = np.cumsum(ns) - ns
+    docs = cs - np.repeat(cs[first] - d[first], ns)
+    tfs = decode_blocks(pdf["tf_bytes"], prefixed_in)
+    dls = decode_blocks(pdf["dl_bytes"], prefixed_in)
     if has_pos:
-        abs_pos = np.concatenate(pos_l)
         occ0 = np.zeros(len(tfs) + 1, dtype=np.int64)
         np.cumsum(tfs, out=occ0[1:])  # posting → global occurrence start
+        # positions: per-posting-reset deltas → absolute (the tf column
+        # delimits each posting's occurrence run)
+        d = decode_blocks(pdf["pos_bytes"], prefixed_in)
+        cs = np.cumsum(d)
+        first = occ0[:-1]
+        abs_pos = cs - np.repeat(cs[first] - d[first], tfs)
     terms = np.repeat(pdf["term_id"].to_numpy(np.int64), ns)
     buckets = np.repeat(pdf["bucket"].to_numpy(np.int64), ns)
     if merge_epochs:
@@ -197,60 +195,69 @@ def _summary_frame(allb: pd.DataFrame, cf: pd.DataFrame) -> pd.DataFrame:
     )
 
 
-def _compact_partition(
-    k1: float,
-    b: float,
-    tshards: int,
-    seg_dir: str,
-    boundaries: list[int],
-    enc_avgdls: list[float],
-    prefixed_in: bool,
-    prefixed_out: bool,
-    merge_epochs: bool,
-    merged_avgdl: float,
-    tomb=None,
-):
-    """mapInPandas kernel over (bucket, tshard)-keyed partitions of block
-    rows: decode every block, regroup postings per (term, bucket[, epoch]),
-    re-encode full blocks, write them task-locally into the NEW segment
-    tree. Returns per-bucket summary rows (the job's only Spark output).
-
-    Memory contract: the WHOLE partition's decoded postings are resident
-    (one numpy lexsort instead of a JVM sort — the build kernel's
-    trade-off). When a partition's decoded footprint exceeds the worker
-    envelope, `compact_index` switches to `_compact_partition_streaming`,
-    which bounds per-task memory by construction."""
-    bnd = np.asarray(boundaries, dtype=np.int64)
-
-    def fn(batches):
-        pdfs = [p for p in batches if len(p)]
-        if not pdfs:
-            return
-        pdf = pd.concat(pdfs, ignore_index=True)
-        outs, cf = _reencode_rows(
-            pdf, bnd, enc_avgdls, k1, b, tshards, prefixed_in,
-            prefixed_out, merge_epochs, merged_avgdl, tomb,
-        )
-        if not outs:
-            return
-        for e, out in outs:
-            _write_segment_files(out, seg_dir, epoch=e)
-        allb = pd.concat([o for _, o in outs], ignore_index=True)
-        yield _summary_frame(allb, cf)
-
-    return fn
-
-
-# streaming slab target: complete (bucket, term) groups accumulate to about
-# this many postings before one _reencode_rows pass — large enough to keep
-# the per-slab numpy/Python overhead negligible, small enough that the
-# decode/gather transients (~0.3-0.5 KB/posting peak for positional
-# payloads) keep a REUSED worker's RSS high-water mark under ~1 GB: with 32
-# concurrent long-lived workers, per-worker watermarks ADD, and a 2M-posting
-# slab's ~3 GB watermark × 32 + the JVM sort OOMed the 125 GiB host
-# (measured 2026-08-21; a group larger than the target still processes
-# whole — the ceiling is one term's postings in one bucket)
+# slab budget in VALUE-weighted units (postings + positional payload bytes,
+# see `_row_weights`): large enough to keep the per-slab numpy/Python
+# overhead negligible, small enough that the decode/gather transients
+# (~0.3-0.5 KB/posting peak for positional payloads) keep a REUSED worker's
+# RSS high-water mark under ~1 GB: with 32 concurrent long-lived workers,
+# per-worker watermarks ADD, and a 2M-posting slab's ~3 GB watermark × 32 +
+# the JVM sort OOMed the 125 GiB host (measured 2026-08-21)
 _STREAM_SLAB_POSTINGS = 500_000
+
+
+def _row_weights(pdf: pd.DataFrame) -> np.ndarray:
+    """Slab weight of each block row = decoded VALUES, not posting rows: a
+    positional Zipf-head slab carries ~Σtf occurrences (measured ~16× the
+    posting count on the 10M soak), and the decode/gather transients scale
+    with occurrences. pos payload bytes ≈ 1 per occurrence, so the byte
+    length is the cheap estimator."""
+    w = pdf["n"].to_numpy(np.int64)
+    if "pos_bytes" in pdf.columns:
+        w = w + np.fromiter(
+            map(len, pdf["pos_bytes"]), dtype=np.int64, count=len(pdf)
+        )
+    return w
+
+
+def _slab_bounds(
+    bucket: np.ndarray,
+    tshard: np.ndarray,
+    term: np.ndarray,
+    weight: np.ndarray,
+    budget: int,
+) -> np.ndarray:
+    """Cut block rows sorted by (bucket, tshard, term_id) into re-encode
+    slabs; returns the boundaries [0, ..., len] (slab i = rows
+    bounds[i]:bounds[i+1]). A slab never crosses a (bucket, tshard) cell —
+    each cell's blocks go to one parquet file — and otherwise ends at the
+    first legal cut where its weight reaches `budget`. Legal cuts are the
+    (bucket, term) group ends, plus every block-row end inside a single
+    group heavier than `budget`: a head term can alone dwarf the budget
+    (bucket_size postings × Σtf occurrences — ~18M units measured at the
+    10M soak ⇒ ~2 GB of decode/gather transients). Each such sub-chunk
+    re-encodes into its own doc-range block run, which the reader already
+    merges by first_doc (blocks of one (term, bucket) are never assumed
+    doc-contiguous), and every doc still lives in exactly one block; the
+    cost is at most one short block per sub-chunk. Weights must be
+    positive (every block row holds ≥ 1 posting)."""
+    n = len(term)
+    cw = np.zeros(n + 1, dtype=np.int64)
+    np.cumsum(weight, out=cw[1:])
+    cell_chg = (bucket[1:] != bucket[:-1]) | (tshard[1:] != tshard[:-1])
+    cell_ends = np.append(np.flatnonzero(cell_chg) + 1, n)
+    ends = np.append(np.flatnonzero(cell_chg | (term[1:] != term[:-1])) + 1, n)
+    starts = np.append(0, ends[:-1])
+    heavy = np.repeat(cw[ends] - cw[starts] > budget, ends - starts)
+    cuts = np.union1d(ends, np.flatnonzero(heavy) + 1)
+    cut_w = cw[cuts]
+    bounds = [0]
+    s = 0
+    while s < n:
+        ce = int(cell_ends[np.searchsorted(cell_ends, s, side="right")])
+        i = int(np.searchsorted(cut_w, cw[s] + budget))
+        s = min(int(cuts[i]), ce) if i < len(cuts) else ce
+        bounds.append(s)
+    return np.asarray(bounds, dtype=np.int64)
 
 
 def _compact_partition_streaming(
@@ -266,27 +273,20 @@ def _compact_partition_streaming(
     merged_avgdl: float,
     tomb=None,
 ):
-    """Streaming variant of `_compact_partition` for partitions whose
-    decoded postings exceed the worker envelope (the measured 10M-soak OOM,
-    SCALE.md §10M-doc compaction): requires the partition SORTED by
-    (bucket, tshard, term_id, first_doc) — the caller adds a
-    `sortWithinPartitions`, whose JVM external sort spills compressed block
-    rows (~5-7 B/posting) instead of holding decoded tokens. The kernel then
-    walks Arrow batches in order, accumulating (bucket, term) groups into
-    ~`_STREAM_SLAB_POSTINGS` VALUE-weighted slabs (weight = postings +
-    occurrences: positional decode/gather transients scale with Σtf, ~16×
-    the posting count on Zipf-head groups at the 10M soak; sorting by
-    first_doc also lands each group's epochs contiguously, doc ranges being
-    epoch-disjoint), re-encodes slab by slab, and appends the encoded blocks
-    to ONE incrementally-written parquet file per (bucket, tshard) cell
-    (atomic tmp→rename on cell close; deterministic content, so
-    crash-retries rewrite identical files). A group larger than the budget
-    sub-chunks at block-row boundaries — each sub-chunk becomes its own
-    doc-range block run, legal under the reader's sub-split merge contract
-    (blocks of one (term, bucket) are never assumed doc-contiguous; every
-    doc stays in exactly one block) at a fill cost of ≤1 short block per
-    sub-chunk. Per-task memory is O(slab + one Arrow batch), independent of
-    partition size AND of any single term's posting volume."""
+    """mapInPandas kernel over (bucket, tshard)-keyed partitions of block
+    rows SORTED by (bucket, tshard, term_id, first_doc) — `compact_index`
+    adds a `sortWithinPartitions`, whose JVM external sort spills compressed
+    block rows (~5-7 B/posting) instead of holding decoded tokens; sorting
+    by first_doc also lands each group's epochs contiguously, doc ranges
+    being epoch-disjoint. The kernel walks Arrow batches in order, cuts
+    them into `_slab_bounds` slabs of complete (bucket, term) groups,
+    re-encodes slab by slab, and appends the encoded blocks to ONE
+    incrementally-written parquet file per (bucket, tshard) cell (atomic
+    tmp→rename on cell close; deterministic content, so crash-retries
+    rewrite identical files). Decoded per-task memory is O(slab),
+    independent of partition size AND of any single term's posting volume;
+    the carry between batches holds compressed rows of one open slab.
+    Returns per-(bucket, term) summary rows (the job's only Spark output)."""
     bnd = np.asarray(boundaries, dtype=np.int64)
 
     def fn(batches):
@@ -298,33 +298,17 @@ def _compact_partition_streaming(
 
         tc = TaskContext.get()
         pid = tc.partitionId() if tc is not None else 0
-
-        writer_state = {"w": None, "tmp": None, "final": None}
+        cell = None  # (bucket, tshard) of the open writer
+        writer = tmp = final = None
         summaries: list[pd.DataFrame] = []
 
         def close_cell():
-            if writer_state["w"] is not None:
-                writer_state["w"].close()
-                os.replace(writer_state["tmp"], writer_state["final"])
-                writer_state["w"] = None
-
-        def open_cell(bkt: int, tsh: int, with_pos: bool):
-            close_cell()
-            d = os.path.join(seg_dir, f"bucket={bkt}", f"tshard={tsh}")
-            os.makedirs(d, exist_ok=True)
-            writer_state["tmp"] = os.path.join(
-                d, f".p{pid:06d}.e0.{os.getpid()}.tmp"
-            )
-            writer_state["final"] = os.path.join(d, f"p{pid:06d}.e0.parquet")
-            writer_state["w"] = pq.ParquetWriter(
-                writer_state["tmp"], _seg_file_schema(with_pos)
-            )
-
-        cell = None  # current (bucket, tshard)
+            if writer is not None:
+                writer.close()
+                os.replace(tmp, final)
 
         def process_slab(slab: pd.DataFrame):
-            """Re-encode one slab of complete groups (single cell)."""
-            nonlocal cell
+            nonlocal cell, writer, tmp, final
             outs, cf = _reencode_rows(
                 slab, bnd, enc_avgdls, k1, b, tshards, prefixed_in,
                 prefixed_out, merge_epochs, merged_avgdl, tomb,
@@ -332,149 +316,65 @@ def _compact_partition_streaming(
             if not outs:
                 return
             allb = pd.concat([o for _, o in outs], ignore_index=True)
-            # one file per cell regardless of epoch: the reader derives a
-            # block's epoch from its doc range, never from the filename
-            # (filename epoch tags only matter to append's orphan scrub,
-            # which targets epochs ≥ the committed count — e0 is safe)
-            with_pos = "pos_bytes" in allb.columns
+            schema = _seg_file_schema("pos_bytes" in allb.columns)
             key = (int(slab["bucket"].iat[0]), int(slab["tshard"].iat[0]))
             if key != cell:
-                open_cell(key[0], key[1], with_pos)
+                # one file per cell regardless of epoch: the reader derives
+                # a block's epoch from its doc range, never from the
+                # filename (filename epoch tags only matter to append's
+                # orphan scrub, which targets epochs ≥ the committed count
+                # — e0 is safe)
+                close_cell()
                 cell = key
-            tbl = pa.Table.from_pandas(
-                allb.sort_values(["term_id", "first_doc"], kind="stable")
-                .drop(columns=["bucket", "tshard", "tf_sum"]),
-                preserve_index=False,
-            ).cast(_seg_file_schema(with_pos))
-            writer_state["w"].write_table(tbl)
+                d = os.path.join(seg_dir, f"bucket={key[0]}", f"tshard={key[1]}")
+                os.makedirs(d, exist_ok=True)
+                tmp = os.path.join(d, f".p{pid:06d}.e0.{os.getpid()}.tmp")
+                final = os.path.join(d, f"p{pid:06d}.e0.parquet")
+                writer = pq.ParquetWriter(tmp, schema)
+            writer.write_table(
+                pa.Table.from_pandas(
+                    allb.sort_values(["term_id", "first_doc"], kind="stable")
+                    .drop(columns=["bucket", "tshard", "tf_sum"]),
+                    preserve_index=False,
+                ).cast(schema)
+            )
             summaries.append(_summary_frame(allb, cf))
 
-        pend: pd.DataFrame | None = None
-        slab_parts: list[pd.DataFrame] = []
-        slab_n = 0
+        def slabs(cur: pd.DataFrame) -> np.ndarray:
+            return _slab_bounds(
+                cur["bucket"].to_numpy(np.int64),
+                cur["tshard"].to_numpy(np.int64),
+                cur["term_id"].to_numpy(np.int64),
+                _row_weights(cur),
+                _STREAM_SLAB_POSTINGS,
+            )
 
-        def part_weight(part: pd.DataFrame) -> int:
-            """Slab budget unit = decoded VALUES, not posting rows: a
-            positional Zipf-head slab carries ~Σtf occurrences (measured
-            ~16× the posting count on the 10M soak), and the decode/gather
-            transients scale with occurrences. pos payload bytes ≈ 1 per
-            occurrence, so the byte length is the cheap estimator."""
-            w = int(part["n"].sum())
-            if "pos_bytes" in part.columns:
-                w += int(sum(len(b) for b in part["pos_bytes"]))
-            return w
-
-        def flush_slabs():
-            nonlocal slab_parts, slab_n
-            if slab_parts:
-                process_slab(pd.concat(slab_parts, ignore_index=True))
-                slab_parts, slab_n = [], 0
-
+        # `carry` = the rows from the start of the slab that holds the
+        # batch's last group, which may continue into the next batch;
+        # cutting again from a slab start reproduces the cuts of a single
+        # pass over the whole partition
+        carry = None
         for pdf in batches:
             if not len(pdf):
                 continue
-            cur = (
-                pd.concat([pend, pdf], ignore_index=True)
-                if pend is not None
-                else pdf
-            )
-            bk = cur["bucket"].to_numpy(np.int64)
-            ts = cur["tshard"].to_numpy(np.int64)
-            tm = cur["term_id"].to_numpy(np.int64)
-            change = (
-                (bk[:-1] != bk[1:]) | (ts[:-1] != ts[1:]) | (tm[:-1] != tm[1:])
-            )
-            starts = np.concatenate(
-                [[0], np.flatnonzero(change) + 1]
-            )
-            # everything before the LAST group is complete; the last group
-            # may continue into the next batch
-            cut = int(starts[-1])
-            complete, pend = cur.iloc[:cut], cur.iloc[cut:]
-            if not len(complete):
-                continue
-            # slab by cell: groups of different cells never share a slab;
-            # WITHIN a cell, append group-by-group so one fat Arrow batch
-            # cannot blow the slab budget (a single GROUP may still exceed
-            # it — one term's postings in one bucket is the irreducible
-            # re-encode unit — but that is the designed ceiling)
-            cbk = complete["bucket"].to_numpy(np.int64)
-            cts = complete["tshard"].to_numpy(np.int64)
-            cell_change = np.concatenate(
-                [[0], np.flatnonzero(
-                    (cbk[:-1] != cbk[1:]) | (cts[:-1] != cts[1:])
-                ) + 1, [len(complete)]]
-            )
-            for s, e in zip(cell_change[:-1], cell_change[1:]):
-                s, e = int(s), int(e)
-                if slab_parts and (
-                    int(complete["bucket"].iat[s]),
-                    int(complete["tshard"].iat[s]),
-                ) != (
-                    int(slab_parts[0]["bucket"].iat[0]),
-                    int(slab_parts[0]["tshard"].iat[0]),
-                ):
-                    flush_slabs()
-                gstarts = starts[(starts >= s) & (starts < e)]
-                gbounds = np.append(gstarts, e)
-                for gs, ge in zip(gbounds[:-1], gbounds[1:]):
-                    grp = complete.iloc[int(gs):int(ge)]
-                    w = part_weight(grp)
-                    if w > _STREAM_SLAB_POSTINGS and len(grp) > 1:
-                        # a HEAD-TERM group can alone dwarf the slab budget
-                        # (bucket_size postings × Σtf occurrences — ~18M
-                        # units measured at the 10M soak ⇒ ~2 GB of decode/
-                        # gather transients). Sub-chunk it at BLOCK-ROW
-                        # boundaries: each sub-chunk re-encodes into its own
-                        # doc-range block run, which the reader already
-                        # merges by first_doc (the build's sub-split
-                        # contract — blocks of one (term, bucket) are never
-                        # assumed doc-contiguous), and every doc still lives
-                        # in exactly one block (fsck invariant). Cost: at
-                        # most one short block per sub-chunk of fill.
-                        rows_per = max(
-                            1, int(len(grp) * _STREAM_SLAB_POSTINGS / w)
-                        )
-                        for c0 in range(0, len(grp), rows_per):
-                            sub = grp.iloc[c0:c0 + rows_per]
-                            slab_parts.append(sub)
-                            slab_n += part_weight(sub)
-                            if slab_n >= _STREAM_SLAB_POSTINGS:
-                                flush_slabs()
-                        continue
-                    slab_parts.append(grp)
-                    slab_n += w
-                    if slab_n >= _STREAM_SLAB_POSTINGS:
-                        flush_slabs()
-        if pend is not None and len(pend):
-            if slab_parts and (
-                int(pend["bucket"].iat[0]),
-                int(pend["tshard"].iat[0]),
-            ) != (
-                int(slab_parts[0]["bucket"].iat[0]),
-                int(slab_parts[0]["tshard"].iat[0]),
-            ):
-                flush_slabs()
-            w = part_weight(pend)
-            if w > _STREAM_SLAB_POSTINGS and len(pend) > 1:
-                rows_per = max(1, int(len(pend) * _STREAM_SLAB_POSTINGS / w))
-                for c0 in range(0, len(pend), rows_per):
-                    slab_parts.append(pend.iloc[c0:c0 + rows_per])
-                    flush_slabs()
-            else:
-                slab_parts.append(pend)
-        flush_slabs()
+            cur = pdf if carry is None else pd.concat([carry, pdf], ignore_index=True)
+            bounds = slabs(cur)
+            key = cur[["bucket", "tshard", "term_id"]].to_numpy(np.int64)
+            # the last group is the sorted suffix of rows sharing its key
+            last_start = len(cur) - int((key == key[-1]).all(axis=1).sum())
+            k = int(np.searchsorted(bounds, last_start, side="right")) - 1
+            for s, e in zip(bounds[:k], bounds[1:k + 1]):
+                process_slab(cur.iloc[s:e])
+            carry = cur.iloc[bounds[k]:]
+        if carry is not None:
+            bounds = slabs(carry)
+            for s, e in zip(bounds[:-1], bounds[1:]):
+                process_slab(carry.iloc[s:e])
         close_cell()
         if summaries:
             yield pd.concat(summaries, ignore_index=True)
 
     return fn
-
-
-# auto-streaming threshold: estimated per-task DECODED bytes above which
-# compact_index switches to the sorted streaming kernel (decoded token
-# expansion ≈ 24 B/posting + 24 B/occurrence for positional indexes)
-_STREAM_AUTO_BYTES = 512 << 20
 
 
 def compact_index(
@@ -483,7 +383,6 @@ def compact_index(
     preserve_epochs: bool = True,
     remove_old: bool = True,
     expunge_deletes: bool = False,
-    streaming: bool | None = None,
 ) -> dict:
     """Rewrite the index's segment tree with defragmented full blocks and
     atomically swap it live (see module docstring for epoch semantics and
@@ -574,30 +473,14 @@ def compact_index(
     n_before = segments.count()
     p = int(spark.conf.get("spark.sql.shuffle.partitions"))
     tshards = stats.get("tshards", DEFAULT_TSHARDS)
-    if streaming is None:
-        # estimated decoded footprint per task: postings expand to ~24 B
-        # each (doc/tf/dl int64) plus ~24 B per occurrence for positions.
-        # Above the envelope, the in-memory kernel's concat-then-lexsort is
-        # the measured OOM at soak scale (SCALE.md §10M-doc compaction) —
-        # stream instead: the JVM sort spills COMPRESSED rows, the kernel
-        # holds one slab.
-        occ = int(stats.get("total_cf", 0))
-        n_post_est = n_before * 96  # blocks ≈ n/96 avg fill; conservative
-        est = (n_post_est * 24 + (occ * 24 if stats.get("positions") else 0))
-        streaming = est / max(p, 1) > _STREAM_AUTO_BYTES
-    kernel_factory = (
-        _compact_partition_streaming if streaming else _compact_partition
+    # the kernel's slab-cut contract: cells contiguous, groups contiguous,
+    # epochs contiguous within a group (doc ranges are epoch-disjoint, so
+    # first_doc order lands them so)
+    shuffled = segments.repartition(p, "bucket", "tshard").sortWithinPartitions(
+        "bucket", "tshard", "term_id", "first_doc"
     )
-    shuffled = segments.repartition(p, "bucket", "tshard")
-    if streaming:
-        # the streaming kernel's group-walk contract: cells contiguous,
-        # groups contiguous, epochs contiguous within a group (doc ranges
-        # are epoch-disjoint, so first_doc order lands them so)
-        shuffled = shuffled.sortWithinPartitions(
-            "bucket", "tshard", "term_id", "first_doc"
-        )
     summaries = shuffled.mapInPandas(
-        kernel_factory(
+        _compact_partition_streaming(
             stats["k1"], stats["b"], tshards, new_dir,
             boundaries, enc_avgdls, prefixed_in, prefixed_out,
             merge_epochs=not preserve_epochs, merged_avgdl=merged_avgdl,
@@ -654,35 +537,28 @@ def compact_index(
     stats["compactions"] = gen
     stats["n_blocks_before"] = n_before
     stats["n_blocks_after"] = n_after
-    if not preserve_epochs:
+    es_dir = os.path.join(index_dir, "epoch_stats")
+    if preserve_epochs:
+        for k, es in enumerate(epoch_stats):
+            es["seg_dir"] = new_name
+            es["compactions"] = gen
+            commit_json(os.path.join(es_dir, f"e{k}.json"), es)
+        commit_json(stats_path, stats)
+    else:
         # a full merge collapses epoch history: epochs reset to 1 and
         # e0.json becomes the merged baseline (== the live view) — the one
         # snapshot that is still exact. This also keeps future compactions'
         # boundary reads (range(epochs)) consistent with the files on disk.
+        # The old snapshots are rewritten only AFTER the live flip, so a
+        # crash before it leaves every one of them intact for the rerun.
         stats["segver"] = 3  # full merge re-encodes everything tagged
-        for k in range(n_epochs):
-            old = os.path.join(index_dir, "epoch_stats", f"e{k}.json")
+        stats["epochs"] = 1
+        commit_json(stats_path, stats)
+        commit_json(os.path.join(es_dir, "e0.json"), stats)
+        for k in range(1, n_epochs):
+            old = os.path.join(es_dir, f"e{k}.json")
             if os.path.exists(old):
                 os.remove(old)
-        stats["epochs"] = 1
-        es0 = dict(stats)
-        tmp = os.path.join(index_dir, "epoch_stats", ".e0.json.tmp")
-        with open(tmp, "w") as f:
-            json.dump(es0, f)
-        os.replace(tmp, os.path.join(index_dir, "epoch_stats", "e0.json"))
-    else:
-        for k in range(n_epochs):
-            es = epoch_stats[k]
-            es["seg_dir"] = new_name
-            es["compactions"] = gen
-            tmp = os.path.join(index_dir, "epoch_stats", f".e{k}.json.tmp")
-            with open(tmp, "w") as f:
-                json.dump(es, f)
-            os.replace(tmp, os.path.join(index_dir, "epoch_stats", f"e{k}.json"))
-    tmp_stats = os.path.join(index_dir, ".stats.json.tmp")
-    with open(tmp_stats, "w") as f:
-        json.dump(stats, f)
-    os.replace(tmp_stats, stats_path)
     if remove_old:
         shutil.rmtree(cur_dir, ignore_errors=True)
     if expunge_deletes and expunged_tomb:

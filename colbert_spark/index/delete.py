@@ -46,6 +46,8 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from colbert_spark.index.build import commit_json
+
 
 def delete_docs(spark: SparkSession, index_dir: str, doc_ids: DataFrame) -> dict:
     """Tombstone `doc_ids` (a DataFrame with a `doc_id` column, index id
@@ -73,10 +75,7 @@ def delete_docs(spark: SparkSession, index_dir: str, doc_ids: DataFrame) -> dict
     stats["tomb_dir"] = name
     stats["tomb_gen"] = gen
     stats["n_deleted"] = int(n_deleted)
-    tmp = os.path.join(index_dir, ".stats.json.tmp")
-    with open(tmp, "w") as f:
-        json.dump(stats, f)
-    os.replace(tmp, stats_path)
+    commit_json(stats_path, stats)
     old = os.path.join(index_dir, f"tombstones_t{gen - 1}")
     if os.path.isdir(old):
         import shutil

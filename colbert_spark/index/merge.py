@@ -39,7 +39,6 @@ would resurrect them), and globally-unique urls across inputs.
 
 from __future__ import annotations
 
-import json
 import os
 import shutil
 
@@ -54,6 +53,7 @@ from colbert_spark.index.build import (
     _write_segment_files,
     assign_dense_rank,
     choose_n_sub,
+    commit_json,
     shuffle_key_exprs,
 )
 from colbert_spark.index.codec import decode_block, encode_block_payloads
@@ -492,11 +492,9 @@ def merge_indexes(
         .write.mode("overwrite")
         .parquet(os.path.join(out_dir, "manifest"))
     )
-    with open(os.path.join(out_dir, "stats.json"), "w") as f:
-        json.dump(stats, f)
+    commit_json(os.path.join(out_dir, "stats.json"), stats)
     os.makedirs(os.path.join(out_dir, "epoch_stats"), exist_ok=True)
-    with open(os.path.join(out_dir, "epoch_stats", "e0.json"), "w") as f:
-        json.dump(stats, f)
+    commit_json(os.path.join(out_dir, "epoch_stats", "e0.json"), stats)
     docs.unpersist()
     merged_dict.unpersist()
     return stats

@@ -3580,6 +3580,7 @@ def _merged_index_dir(spark: SparkSession, sf_dir: str) -> str:
     import shutil
     import tempfile
 
+    from colbert_spark.index.build import commit_json
     from colbert_spark.index.merge import merge_indexes
 
     idx = os.path.join(
@@ -3597,8 +3598,7 @@ def _merged_index_dir(spark: SparkSession, sf_dir: str) -> str:
             a, b_ = _shard_index_dirs(spark, sf_dir)
             stats = merge_indexes(spark, [a, b_], idx, bucket_size=1000)
             stats["merged_from"] = 2
-            with open(done, "w") as f:
-                json.dump(stats, f)
+            commit_json(done, stats)
         _MERGED_IDX_BUILT.add(idx)
     return idx
 

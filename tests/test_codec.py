@@ -8,6 +8,7 @@ from colbert_spark.index.codec import (
     CODEC_PFOR,
     CODEC_VARBYTE,
     decode_block,
+    decode_blocks,
     decode_postings,
     delta_decode,
     delta_encode,
@@ -83,6 +84,8 @@ def _roundtrip(values, sizes):
         assert p[0] in (CODEC_VARBYTE, CODEC_PFOR)
         got = decode_block(p)
         assert got.tolist() == arr[starts[i]:ends[i]].tolist()
+    # the batch decoder: mixed varbyte/pfor payloads back in block order
+    assert decode_blocks(payloads).tolist() == arr.tolist()
     return payloads
 
 
@@ -157,6 +160,8 @@ def test_pfor_all_zeros_and_equal():
 def test_v2_unprefixed_decode_still_works():
     arr = np.array([3, 1, 4, 1, 5, 926], dtype=np.int64)
     assert decode_block(vb_encode(arr), prefixed=False).tolist() == arr.tolist()
+    payloads = [vb_encode(arr[:2]), vb_encode(arr[2:])]
+    assert decode_blocks(payloads, prefixed=False).tolist() == arr.tolist()
 
 
 @settings(max_examples=100, deadline=None)
@@ -189,3 +194,4 @@ def test_vb_encode_payloads_slicing(values, data):
     assert len(payloads) == len(starts)
     for p, s, e in zip(payloads, bounds[:-1], bounds[1:]):
         assert decode_block(p).tolist() == values[s:e]
+    assert decode_blocks(payloads).tolist() == values

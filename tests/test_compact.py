@@ -10,7 +10,7 @@ import os
 import pytest
 
 from colbert_spark.index.build import append_index, build_index
-from colbert_spark.index.compact import compact_index
+from colbert_spark.index.compact import _reencode_rows, _slab_bounds, compact_index
 from colbert_spark.query.wand import IndexSearcher
 
 K = 10
@@ -117,49 +117,197 @@ def test_append_after_compaction(spark, tiny_corpus, tiny_queries, tmp_path_fact
     assert score_multiset(got) == score_multiset(want)
 
 
-def test_streaming_compaction_identical_to_in_memory(
+def _block_multiset(frames):
+    cols = [
+        "bucket", "term_id", "first_doc", "last_doc", "n",
+        "doc_bytes", "tf_bytes", "dl_bytes",
+    ]
+    return sorted(
+        tuple(bytes(v) if isinstance(v, (bytes, bytearray)) else int(v) for v in row)
+        for f in frames
+        for row in f[cols].itertuples(index=False)
+    )
+
+
+def _compacted_blocks(spark, index_dir):
+    stats = json.load(open(os.path.join(index_dir, "stats.json")))
+    seg = spark.read.parquet(os.path.join(index_dir, stats["seg_dir"]))
+    return _block_multiset([seg.toPandas()])
+
+
+def _reference_blocks(spark, index_dir, preserve_epochs):
+    """The regroup/re-encode of the whole collected segment table in ONE
+    driver-side `_reencode_rows` call — what compaction must produce when
+    no (bucket, term) group outweighs the slab budget."""
+    import numpy as np
+
+    stats = json.load(open(os.path.join(index_dir, "stats.json")))
+    es = [
+        json.load(open(os.path.join(index_dir, "epoch_stats", f"e{k}.json")))
+        for k in range(stats["epochs"])
+    ]
+    pdf = spark.read.parquet(os.path.join(index_dir, stats["seg_dir"])).toPandas()
+    prefixed_in = stats["segver"] >= 3
+    outs, _ = _reencode_rows(
+        pdf,
+        np.asarray([e["N"] for e in es], dtype=np.int64),
+        [es[0]["avgdl"]] + [e["avgdl"] for e in es[:-1]],
+        stats["k1"],
+        stats["b"],
+        stats["tshards"],
+        prefixed_in,
+        prefixed_in if preserve_epochs else True,
+        merge_epochs=not preserve_epochs,
+        merged_avgdl=stats.get("min_enc_avgdl", stats["avgdl"]),
+        tomb=None,
+    )
+    return _block_multiset([o for _, o in outs])
+
+
+def test_compaction_blocks_match_reencode_reference(
     spark, fragmented_dir, tiny_queries
 ):
-    """The streaming kernel (sorted partitions, slab re-encode, incremental
-    per-cell writers — the bounded-memory path for soak-scale partitions)
-    must produce an index EQUIVALENT to the in-memory kernel: identical
-    block-level content (term/doc/payload multisets), identical results on
-    the live view and every epoch snapshot, fsck-clean."""
-    import shutil
-
-    from pyspark.sql import functions as F
-
+    """Compaction (sorted partitions, slab re-encode, incremental per-cell
+    writers) produces exactly the blocks of one whole-table re-encode, the
+    live view and every epoch snapshot answer as before, and the compacted
+    index is fsck-clean."""
     from colbert_spark.index.inspect import index_fsck
 
     queries = spark.createDataFrame(tiny_queries[:20])
-    twin = fragmented_dir + "_twin"
-    shutil.copytree(fragmented_dir, twin)
+    epochs = ({}, {"as_of_epoch": 0}, {"as_of_epoch": 1})
+    before = [_topk_rows(spark, fragmented_dir, queries, **kw) for kw in epochs]
+    want = _reference_blocks(spark, fragmented_dir, preserve_epochs=True)
 
-    compact_index(spark, fragmented_dir, preserve_epochs=True, streaming=False)
-    compact_index(spark, twin, preserve_epochs=True, streaming=True)
+    stats = compact_index(spark, fragmented_dir, preserve_epochs=True)
 
-    st_a = json.load(open(os.path.join(fragmented_dir, "stats.json")))
-    st_b = json.load(open(os.path.join(twin, "stats.json")))
-    assert st_a["n_blocks_after"] == st_b["n_blocks_after"]
-
-    def block_multiset(d, st):
-        seg = spark.read.parquet(os.path.join(d, st["seg_dir"]))
-        return sorted(
-            (
-                r["bucket"], r["term_id"], r["first_doc"], r["last_doc"],
-                r["n"], bytes(r["doc_bytes"]), bytes(r["tf_bytes"]),
-                bytes(r["dl_bytes"]),
-            )
-            for r in seg.select(
-                "bucket", "term_id", "first_doc", "last_doc", "n",
-                "doc_bytes", "tf_bytes", "dl_bytes",
-            ).collect()
-        )
-
-    assert block_multiset(fragmented_dir, st_a) == block_multiset(twin, st_b)
-    for kw in ({}, {"as_of_epoch": 0}, {"as_of_epoch": 1}):
-        assert _topk_rows(spark, fragmented_dir, queries, **kw) == _topk_rows(
-            spark, twin, queries, **kw
-        )
-    res = index_fsck(spark, twin, deep=True)
+    assert stats["n_blocks_after"] == len(want)
+    assert _compacted_blocks(spark, fragmented_dir) == want
+    for kw, rows in zip(epochs, before):
+        assert _topk_rows(spark, fragmented_dir, queries, **kw) == rows
+    res = index_fsck(spark, fragmented_dir, deep=True)
     assert res["ok"], res
+
+
+def test_compaction_groups_straddling_arrow_batches(
+    spark, fragmented_dir, tiny_queries
+):
+    """With a few rows per Arrow batch, (bucket, term) groups and cells
+    straddle batches, so the kernel's carry of the open slab runs on every
+    batch; the blocks must still equal the whole-table re-encode."""
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    queries = spark.createDataFrame(tiny_queries[:20])
+    before = _topk_rows(spark, fragmented_dir, queries)
+    want = _reference_blocks(spark, fragmented_dir, preserve_epochs=False)
+    old = spark.conf.get(key)
+    spark.conf.set(key, "7")
+    try:
+        compact_index(spark, fragmented_dir, preserve_epochs=False)
+    finally:
+        spark.conf.set(key, old)
+    assert _compacted_blocks(spark, fragmented_dir) == want
+    assert _topk_rows(spark, fragmented_dir, queries) == before
+
+
+def test_compact_crash_at_stats_commit_leaves_old_index_live(
+    spark, fragmented_dir, tiny_queries, monkeypatch
+):
+    """A crash on the final stats.json replace leaves the old index live:
+    stats.json still names the old tree, every epoch snapshot still loads
+    and answers as before, and a rerun completes the compaction."""
+    queries = spark.createDataFrame(tiny_queries[:20])
+    before = _topk_rows(spark, fragmented_dir, queries)
+    before_e1 = _topk_rows(spark, fragmented_dir, queries, as_of_epoch=1)
+    stats_path = os.path.join(fragmented_dir, "stats.json")
+    old_stats = json.load(open(stats_path))
+    real_replace = os.replace
+
+    def crash_on_stats(src, dst):
+        if os.path.basename(dst) == "stats.json":
+            raise OSError("injected crash at the stats.json commit")
+        real_replace(src, dst)
+
+    with monkeypatch.context() as m:
+        m.setattr(os, "replace", crash_on_stats)
+        with pytest.raises(OSError, match="injected"):
+            compact_index(spark, fragmented_dir, preserve_epochs=False)
+
+    assert json.load(open(stats_path)) == old_stats
+    assert old_stats["seg_dir"] == "segments"
+    assert _topk_rows(spark, fragmented_dir, queries) == before
+    assert _topk_rows(spark, fragmented_dir, queries, as_of_epoch=1) == before_e1
+
+    stats = compact_index(spark, fragmented_dir, preserve_epochs=False)
+    assert stats["seg_dir"] == "segments_c1"
+    assert _topk_rows(spark, fragmented_dir, queries) == before
+
+
+def _cut(bucket, tshard, term, weight, budget):
+    import numpy as np
+
+    arr = lambda v: np.asarray(v, dtype=np.int64)  # noqa: E731
+    return _slab_bounds(
+        arr(bucket), arr(tshard), arr(term), arr(weight), budget
+    ).tolist()
+
+
+def test_slab_bounds_cut_at_cell_change():
+    # two light groups per cell, cells (0,0), (0,1), (1,1)
+    assert _cut(
+        [0, 0, 0, 0, 1, 1], [0, 0, 1, 1, 1, 1], [1, 2, 1, 3, 1, 3],
+        [1] * 6, budget=100,
+    ) == [0, 2, 4, 6]
+
+
+def test_slab_bounds_several_groups_per_slab():
+    # groups of weight 2; a slab closes at the first group end reaching 5
+    assert _cut(
+        [0] * 8, [0] * 8, [1, 1, 2, 2, 3, 3, 4, 5], [1] * 8, budget=5
+    ) == [0, 6, 8]
+    # a multi-row group is never cut while it fits the budget
+    assert _cut([0] * 4, [0] * 4, [1, 2, 2, 2], [2, 1, 1, 1], budget=3) == [0, 4]
+
+
+def test_slab_bounds_sub_chunks_heavy_group_at_block_rows():
+    # term 2 weighs 8 > budget 3: cut at its block rows as the slab fills;
+    # the light groups around it are not split
+    assert _cut(
+        [0] * 6, [0] * 6, [1, 2, 2, 2, 2, 3], [1, 2, 2, 2, 2, 1], budget=3
+    ) == [0, 2, 4, 6]
+
+
+def test_slab_bounds_single_row_group_heavier_than_budget():
+    # a one-row group cannot be split: it closes its slab whole
+    assert _cut([0] * 3, [0] * 3, [1, 2, 3], [9, 1, 1], budget=3) == [0, 1, 3]
+    assert _cut([0] * 3, [0] * 3, [1, 2, 3], [1, 9, 1], budget=3) == [0, 2, 3]
+
+
+def test_slab_bounds_matches_loop_reference():
+    """The numpy cut equals a row-by-row walk of the same rules on random
+    sorted inputs: close the slab at a cell end, or at a legal cut (group
+    end, or any row of a group heavier than the budget) once it reaches
+    the budget."""
+    import numpy as np
+
+    rng = np.random.default_rng(7)
+    for _ in range(300):
+        n = int(rng.integers(1, 60))
+        b, t, m = rng.integers(0, 3, size=(3, n))
+        order = np.lexsort((m, t, b))
+        bucket, tshard, term = b[order], t[order], m[order]
+        weight = rng.integers(1, 6, size=n)
+        budget = int(rng.integers(1, 15))
+
+        key = list(zip(bucket, tshard, term))
+        ends = [i for i in range(n) if i == n - 1 or key[i] != key[i + 1]]
+        heavy, start = [False] * n, 0
+        for e in ends:
+            heavy[start:e + 1] = [sum(weight[start:e + 1]) > budget] * (e + 1 - start)
+            start = e + 1
+        want, acc = [0], 0
+        for i in range(n):
+            acc += weight[i]
+            cell_end = i == n - 1 or key[i][:2] != key[i + 1][:2]
+            if cell_end or ((i in ends or heavy[i]) and acc >= budget):
+                want.append(i + 1)
+                acc = 0
+        assert _cut(bucket, tshard, term, weight, budget) == want

@@ -154,35 +154,51 @@ def test_append_manifest_has_only_bucket_rows(spark, tmp_path):
 def test_append_scrubs_crashed_epoch_orphans(spark, tmp_path, tiny_queries):
     """Plant fake segment/docs files tagged with the about-to-run epoch (a
     crashed attempt under a DIFFERENT partition count); append must remove
-    them and produce an index rank-identical to a fresh build."""
-    d = str(tmp_path / "idx_app_scrub")
-    build_index(spark, _mini_pages(spark, 0, 300), d, bucket_size=64)
-    orphan_seg = os.path.join(d, "segments", "bucket=0", "tshard=0",
-                              "p999999.e1.parquet")
-    orphan_doc = os.path.join(d, "docs", "p999999.e1.parquet")
-    # duplicate a REAL e0 file under the orphan name: schema-valid, so if the
-    # scrub regressed the reader would double-count these postings
-    src = glob.glob(os.path.join(d, "segments", "bucket=0", "tshard=0",
-                                 "*.e0.parquet"))[0]
+    them and produce an index rank-identical to a fresh build. The second
+    input is a 2-epoch index compacted with preserve_epochs=True: compaction
+    writes every epoch's blocks to one `p*.e0.parquet` per cell, so the
+    scrub must remove only the orphan, never compacted data."""
     import shutil
 
-    shutil.copy(src, orphan_seg)
-    shutil.copy(glob.glob(os.path.join(d, "docs", "*.parquet"))[0], orphan_doc)
-    append_index(spark, _mini_pages(spark, 300, 450), d)
-    assert not os.path.exists(orphan_seg)
-    assert not os.path.exists(orphan_doc)
+    from colbert_spark.index.compact import compact_index
 
-    fresh = str(tmp_path / "idx_fresh")
-    build_index(spark, _mini_pages(spark, 0, 450), fresh, bucket_size=64)
     qdf = spark.createDataFrame(
         [(0, "alpha gamma"), (1, "beta doc 0301")], "qid long, question string"
     )
-    a = IndexSearcher(spark, d).search(qdf, k=K).collect()
-    b = IndexSearcher(spark, fresh).search(qdf, k=K).collect()
     key = lambda rows: sorted(
         (r["qid"], r["rank"], r["doc_id"], round(r["score"], 9)) for r in rows
     )
-    assert key(a) == key(b)
+    for compacted in (False, True):
+        d = str(tmp_path / f"idx_app_scrub_{int(compacted)}")
+        build_index(spark, _mini_pages(spark, 0, 300), d, bucket_size=64)
+        lo = 300
+        if compacted:
+            append_index(spark, _mini_pages(spark, 300, 450), d)
+            compact_index(spark, d, preserve_epochs=True)
+            lo = 450
+        stats = json.load(open(os.path.join(d, "stats.json")))
+        seg = os.path.join(d, stats["seg_dir"])
+        epoch = stats["epochs"]
+        kept = glob.glob(os.path.join(seg, "**", "*.parquet"), recursive=True)
+        orphan_seg = os.path.join(seg, "bucket=0", "tshard=0",
+                                  f"p999999.e{epoch}.parquet")
+        orphan_doc = os.path.join(d, "docs", f"p999999.e{epoch}.parquet")
+        # duplicate a REAL e0 file under the orphan name: schema-valid, so if
+        # the scrub regressed the reader would double-count these postings
+        src = glob.glob(os.path.join(seg, "bucket=0", "tshard=0",
+                                     "*.e0.parquet"))[0]
+        shutil.copy(src, orphan_seg)
+        shutil.copy(glob.glob(os.path.join(d, "docs", "*.parquet"))[0], orphan_doc)
+        append_index(spark, _mini_pages(spark, lo, lo + 150), d)
+        assert not os.path.exists(orphan_seg)
+        assert not os.path.exists(orphan_doc)
+        assert all(os.path.exists(f) for f in kept)
+
+        fresh = str(tmp_path / f"idx_fresh_{int(compacted)}")
+        build_index(spark, _mini_pages(spark, 0, lo + 150), fresh, bucket_size=64)
+        a = IndexSearcher(spark, d).search(qdf, k=K).collect()
+        b = IndexSearcher(spark, fresh).search(qdf, k=K).collect()
+        assert key(a) == key(b), f"compacted={compacted}"
 
 
 def test_v1_index_fails_load_with_clear_error(spark, tmp_path):
