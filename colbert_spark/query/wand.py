@@ -69,7 +69,7 @@ from __future__ import annotations
 import json
 import os
 import threading
-from collections import OrderedDict
+from collections import Counter, OrderedDict
 from concurrent.futures import ThreadPoolExecutor
 from typing import NamedTuple
 
@@ -110,6 +110,50 @@ _EMPTY = pd.DataFrame(
         "score": pd.Series([], dtype="float64"),
     }
 )
+
+_NO_DOCS = np.empty(0, dtype=np.int64)
+_NO_SCORES = np.empty(0, dtype=np.float64)
+
+
+def _point_result(docs: np.ndarray, scores: np.ndarray, k: int) -> pd.DataFrame:
+    """Every `search_point` exit, empty included: exact top-k by (score DESC,
+    doc_id ASC) as int64/int64/float64 rank/doc_id/score over a RangeIndex.
+    From numpy, never pandas Series (~5× the cost per query)."""
+    sel = np.lexsort((docs, -scores))[:k]
+    return pd.DataFrame(
+        {
+            "rank": np.arange(1, len(sel) + 1, dtype=np.int64),
+            "doc_id": docs[sel].astype(np.int64, copy=False),
+            "score": scores[sel].astype(np.float64, copy=False),
+        },
+        copy=False,  # docs[sel] and scores[sel] are fresh copies
+    )
+
+
+def _split_blocks(pdf: pd.DataFrame, term_ids: list[int]) -> dict:
+    """Point block-LRU entries (frame, bytes) per term of one collected
+    block table: a stable argsort + `searchsorted` split, O(rows log rows)
+    where a mask per term is O(terms × rows). Each frame keeps its rows'
+    collect order, owns its memory and has a RangeIndex. Bytes are what
+    `memory_usage(deep=True)` reports (values + object payloads), taken
+    from per-row prefix sums: that call costs ~0.3 ms per frame."""
+    tid = pdf["term_id"].to_numpy()
+    order = np.argsort(tid, kind="stable")
+    srt, ordered = tid[order], pdf.take(order)
+    row_nb = np.zeros(len(ordered), dtype=np.int64)
+    for c in ordered.columns:
+        v = ordered[c].to_numpy()
+        row_nb += v.itemsize
+        if v.dtype == object:
+            row_nb += np.array([x.__sizeof__() for x in v], np.int64)
+    cum = np.concatenate([[0], np.cumsum(row_nb)]).tolist()
+    lo = np.searchsorted(srt, term_ids, side="left")
+    hi = np.searchsorted(srt, term_ids, side="right")
+    out: dict[int, tuple[pd.DataFrame, int]] = {}
+    for t, a, z in zip(term_ids, lo.tolist(), hi.tolist()):
+        sub = ordered.iloc[a:z].reset_index(drop=True)
+        out[t] = (sub, cum[z] - cum[a] + sub.index.memory_usage(deep=True))
+    return out
 
 
 def _bm25(tfs: np.ndarray, dls: np.ndarray, idf: float, k1: float, b: float, avgdl: float):
@@ -1276,7 +1320,9 @@ class IndexSearcher:
         `_fetch_blocks` uses, skipping any term over the per-fetch guard,
         and fetches in guard-sized slices. Returns the number of terms
         prefetched. Cost: one dictionary top-df job + a few block fetches —
-        all at warm time, zero at request time."""
+        all at warm time, zero at request time. The collects run outside
+        `_point_lock` (the snapshot is immutable, so a slice cannot go
+        stale): point queries never wait on them."""
         budget = int(
             budget_bytes
             if budget_bytes is not None
@@ -1292,32 +1338,31 @@ class IndexSearcher:
             .limit(65536)
             .collect()
         )
-        pick: list[int] = []
-        df_map: dict[int, int] = {}
-        est = 0
-        with self._point_lock:
-            for r in rows:
-                nb = 10 * int(r["df"])
-                if nb > self.point_fetch_max_bytes or est + nb > budget:
-                    continue  # keep filling with smaller head terms
-                est += nb
-                tid = int(r["term_id"])
-                pick.append(tid)
-                df_map[tid] = int(r["df"])
-                self._term_cache[r["term"]] = (tid, int(r["df"]))
+        picked: dict[str, tuple[int, int]] = {}
+        chunks: list[list[int]] = []
+        est = acc = 0
+        for r in rows:
+            tid, df = int(r["term_id"]), int(r["df"])
+            nb = 10 * df
+            if nb > self.point_fetch_max_bytes or est + nb > budget:
+                continue  # keep filling with smaller head terms
+            est += nb
+            picked[r["term"]] = (tid, df)
             # slice the fetch under the per-fetch byte guard
-            chunk: list[int] = []
-            acc = 0
-            for tid in pick:
-                nb = 10 * df_map[tid]
-                if chunk and acc + nb > self.point_fetch_max_bytes:
-                    self._fetch_blocks(chunk, df_map)
-                    chunk, acc = [], 0
-                chunk.append(tid)
-                acc += nb
-            if chunk:
-                self._fetch_blocks(chunk, df_map)
-        return len(pick)
+            if not chunks or acc + nb > self.point_fetch_max_bytes:
+                chunks.append([])
+                acc = 0
+            chunks[-1].append(tid)
+            acc += nb
+        with self._point_lock:
+            self._term_cache.update(picked)
+        for chunk in chunks:
+            with self._point_lock:
+                missing = [t for t in chunk if t not in self._block_cache]
+            frames = self._collect_blocks(missing) if missing else {}
+            with self._point_lock:
+                self._install_blocks(frames, chunk)
+        return len(picked)
 
     def close(self) -> None:
         if self._warm is not None:
@@ -1670,8 +1715,6 @@ class IndexSearcher:
             return self._resolve_batch_distributed(
                 queries, has_exclude, has_require
             )
-        from collections import Counter
-
         pos_tf: dict[int, Counter] = {}
         neg_terms: dict[int, set] = {}
         req_groups: dict[int, list[list[str]]] = {}
@@ -2175,7 +2218,7 @@ class IndexSearcher:
         point query can schedule; a cache-hot query schedules none. The
         collected bytes are the terms' compressed payloads (on-disk density,
         ~5-7 B/posting), NOT decoded postings, so even a df=10^6 head term
-        costs single-digit MB.
+        costs single-digit MB. The point lock is held by the caller.
 
         Bounded: with `df_by_tid` (the dictionary df the caller already
         resolved), the fetch size is ESTIMATED before collecting — df ×
@@ -2190,42 +2233,49 @@ class IndexSearcher:
             est = sum(10 * int(df_by_tid.get(t, 0)) for t in missing)
             if est > self.point_fetch_max_bytes:
                 return False
-        if missing:
+        frames = self._collect_blocks(missing) if missing else {}
+        self._install_blocks(frames, term_ids)
+        return True
+
+    def _collect_blocks(self, term_ids: list[int]) -> dict[int, tuple]:
+        """One Spark collect of `term_ids`' block rows as block-LRU entries.
+        Takes the point lock only to count the job: `prefetch_point`
+        collects without holding it."""
+        with self._point_lock:
             self._block_fetch_jobs += 1
-            cols = [
+        src = self._warm
+        if src is None:
+            src = self.pruned_scan(term_ids)
+        pdf = (
+            src.filter(F.col("term_id").isin(term_ids))
+            .select(
                 "bucket", "term_id", "first_doc", "last_doc", "max_unit",
                 "doc_bytes", "tf_bytes", "dl_bytes",
-            ]
-            src = (
-                self._warm
-                if self._warm is not None
-                else self.pruned_scan(missing)
             )
-            pdf = (
-                src.filter(F.col("term_id").isin(missing))
-                .select(*cols)
-                .toPandas()
-            )
-            for t in missing:
-                sub = pdf[pdf["term_id"] == t].reset_index(drop=True)
-                nb = int(sub.memory_usage(deep=True).sum())
-                self._block_cache[t] = (sub, nb)
-                self._block_cache_bytes += nb
-        current = set(term_ids)
-        for t in term_ids:
+            .toPandas()
+        )
+        return _split_blocks(pdf, term_ids)
+
+    def _install_blocks(self, frames: dict, current: list[int]) -> None:
+        """(Point lock held.) Add entries for terms not yet resident, touch
+        `current`, evict LRU terms outside it over `point_cache_bytes`."""
+        for t, entry in frames.items():
+            if t not in self._block_cache:
+                self._block_cache[t] = entry
+                self._block_cache_bytes += entry[1]
+        for t in current:
             if t in self._block_cache:
                 self._block_cache.move_to_end(t)
-        # evict LRU terms not needed by the current query
+        keep = set(current)
         while self._block_cache_bytes > self.point_cache_bytes:
             victim = next(
-                (t for t in self._block_cache if t not in current), None
+                (t for t in self._block_cache if t not in keep), None
             )
             if victim is None:
                 break
             _, nb = self._block_cache.pop(victim)
             self._block_cache_bytes -= nb
             self._point_tbs.pop(victim, None)
-        return True
 
     def search_point(self, question: str, k: int = 10,
                      exclude: str | None = None,
@@ -2245,45 +2295,8 @@ class IndexSearcher:
         to `search()` on the same snapshot (asserted in tests). An index
         with a LARGE pending-delete set (cogroup masking) falls back to the
         distributed path: the mask is deliberately never driver-resident."""
-        empty = pd.DataFrame(
-            {
-                "rank": pd.Series([], dtype="int64"),
-                "doc_id": pd.Series([], dtype="int64"),
-                "score": pd.Series([], dtype="float64"),
-            }
-        )
-        def _distributed_fallback() -> pd.DataFrame:
-            # exact degrade path: one distributed search() — used when the
-            # mask must stay distributed (large tombstone set) or a head
-            # term's postings are too big to collect (`_fetch_blocks` bound)
-            fields = [("qid", 0), ("question", question)]
-            if exclude:
-                fields.append(("exclude", exclude))
-            if require:
-                fields.append(("require", require))
-            schema = ", ".join(
-                f"{n} {'long' if n == 'qid' else 'string'}"
-                for n, _ in fields
-            )
-            qdf = self.spark.createDataFrame(
-                [tuple(v for _, v in fields)], schema
-            )
-            rows = self.search(qdf, k=k).collect()
-            if not rows:
-                return empty
-            rows.sort(key=lambda r: r["rank"])
-            return pd.DataFrame(
-                {
-                    "rank": [r["rank"] for r in rows],
-                    "doc_id": [r["doc_id"] for r in rows],
-                    "score": [r["score"] for r in rows],
-                }
-            )
-
         if self._tomb_df is not None:
-            return _distributed_fallback()
-        from collections import Counter
-
+            return self._point_fallback(question, k, exclude, require)
         from colbert_spark.functions.analyzer import py_analyze
 
         counts = Counter(py_analyze(py_tokenize(question or ""), self._analyzer))
@@ -2301,7 +2314,7 @@ class IndexSearcher:
                 if toks:
                     req_tok_groups.append(sorted(set(toks)))
         if not counts:
-            return empty
+            return _point_result(_NO_DOCS, _NO_SCORES, k)
         resolved = self._lookup_terms(
             sorted(
                 set(counts)
@@ -2316,7 +2329,7 @@ class IndexSearcher:
             if resolved.get(t) is not None
         )
         if not pairs:
-            return empty
+            return _point_result(_NO_DOCS, _NO_SCORES, k)
         tids = np.array([p[0] for p in pairs], dtype=np.int64)
         qtfs = np.array([p[1] for p in pairs], dtype=np.float64)
         neg_tids = sorted(
@@ -2328,7 +2341,8 @@ class IndexSearcher:
                 resolved[t][0] for t in g if resolved.get(t) is not None
             )
             if not gtids:
-                return empty  # fully-OOV required group: nothing can match
+                # fully-OOV required group: nothing can match
+                return _point_result(_NO_DOCS, _NO_SCORES, k)
             req_groups.append(np.array(gtids, dtype=np.int64))
         idf_map = {}
         df_by_tid: dict[int, int] = {}
@@ -2352,17 +2366,36 @@ class IndexSearcher:
         # SPARK jobs of cold queries, which release the lock's owner quickly
         # on the hot path)
         with self._point_lock:
-            if not self._fetch_blocks(all_ids, df_by_tid):
-                pass  # head term too big to collect — degrade below
-            else:
+            # False: a head term too big to collect — degrade below
+            if self._fetch_blocks(all_ids, df_by_tid):
                 return self._score_point_locked(
-                    all_ids, tids, qtfs, neg_tids, idf_map, k, empty,
+                    all_ids, tids, qtfs, neg_tids, idf_map, k,
                     req_groups=req_groups, df_by_tid=df_by_tid,
                 )
-        return _distributed_fallback()
+        return self._point_fallback(question, k, exclude, require)
+
+    def _point_fallback(self, question, k, exclude, require) -> pd.DataFrame:
+        """`search_point`'s exact degrade path: one distributed `search()`,
+        used when the mask must stay distributed (large tombstone set) or a
+        head term's postings are too big to collect (`_fetch_blocks`
+        bound)."""
+        row = {"qid": 0, "question": question}
+        for n, v in (("exclude", exclude), ("require", require)):
+            if v:
+                row[n] = v
+        schema = ", ".join(
+            f"{n} {'long' if n == 'qid' else 'string'}" for n in row
+        )
+        qdf = self.spark.createDataFrame([tuple(row.values())], schema)
+        rows = self.search(qdf, k=k).collect()
+        return _point_result(
+            np.array([r["doc_id"] for r in rows], dtype=np.int64),
+            np.array([r["score"] for r in rows], dtype=np.float64),
+            k,
+        )
 
     def _score_point_locked(
-        self, all_ids, tids, qtfs, neg_tids, idf_map, k, empty,
+        self, all_ids, tids, qtfs, neg_tids, idf_map, k,
         req_groups: list | None = None,
         df_by_tid: dict[int, int] | None = None,
     ) -> pd.DataFrame:
@@ -2410,7 +2443,7 @@ class IndexSearcher:
             >= self.point_prune_min_postings
         ):
             self.point_prune_stats["queries_pruned"] += 1
-            return self._score_point_pruned(tids, qtfs, k, empty)
+            return self._score_point_pruned(tids, qtfs, k)
         self.point_prune_stats["queries_dense"] += 1
         batch = [(0, tids, qtfs)]
         neg_map = (
@@ -2434,20 +2467,10 @@ class IndexSearcher:
             )
             out_d.extend(d)
             out_s.extend(s)
-        if not out_d:
-            return empty
-        docs = np.concatenate(out_d)
-        scores = np.concatenate(out_s)
-        sel = np.lexsort((docs, -scores))[: min(k, len(docs))]
-        return pd.DataFrame(
-            {
-                "rank": np.arange(1, len(sel) + 1, dtype=np.int64),
-                "doc_id": docs[sel],
-                "score": scores[sel],
-            }
-        )
+        docs = np.concatenate([_NO_DOCS, *out_d])
+        return _point_result(docs, np.concatenate([_NO_SCORES, *out_s]), k)
 
-    def _score_point_pruned(self, tids, qtfs, k, empty) -> pd.DataFrame:
+    def _score_point_pruned(self, tids, qtfs, k) -> pd.DataFrame:
         """Driver-side MaxScore over the resident block cache (point lock
         held by caller): a running global top-k threshold θ carried ACROSS
         buckets (visited in descending upper-bound order), essential/non-
@@ -2479,8 +2502,6 @@ class IndexSearcher:
             for bk, tb in self._point_tbs.get(int(t), {}).items():
                 per_bucket.setdefault(int(bk), []).append((tb, float(qtf)))
                 stats["blocks_seen"] += len(tb.maxs)
-        if not per_bucket:
-            return empty
         # visit buckets in descending total upper bound: θ rises fastest,
         # and once a bucket's bound falls below θ every later one does too
         bucket_list = sorted(
@@ -2490,8 +2511,7 @@ class IndexSearcher:
             ),
             key=lambda x: (-x[0], x[1]),
         )
-        pool_d = np.empty(0, np.int64)
-        pool_s = np.empty(0, np.float64)
+        pool_d, pool_s = _NO_DOCS, _NO_SCORES
         theta = 0.0
         dense_hint = False
         for bucket_ub, _bk, terms in bucket_list:
@@ -2511,16 +2531,7 @@ class IndexSearcher:
                 keep = pool_s >= kth
                 pool_d, pool_s = pool_d[keep], pool_s[keep]
                 theta = float(kth)
-        if not pool_d.size:
-            return empty
-        sel = np.lexsort((pool_d, -pool_s))[: min(k, len(pool_d))]
-        return pd.DataFrame(
-            {
-                "rank": np.arange(1, len(sel) + 1, dtype=np.int64),
-                "doc_id": pool_d[sel],
-                "score": pool_s[sel],
-            }
-        )
+        return _point_result(pool_d, pool_s, k)
 
     def score_matches(self, queries: DataFrame) -> DataFrame:
         """Every scored match, uncut: queries(qid, question) → (qid, doc_id,
@@ -3214,25 +3225,10 @@ class ShardedSearcher:
         parts = []
         for i, f in enumerate(futs):
             pdf = f.result()
-            if len(pdf):
-                urls = self.searchers[i]._lookup_urls(
-                    [int(d) for d in pdf["doc_id"]]
-                )
-                pdf = pdf.assign(
-                    shard=np.int64(i),
-                    url=[urls[int(d)] for d in pdf["doc_id"]],
-                )
-                parts.append(pdf)
-        if not parts:
-            return pd.DataFrame(
-                {
-                    "rank": pd.Series([], dtype="int64"),
-                    "url": pd.Series([], dtype="object"),
-                    "score": pd.Series([], dtype="float64"),
-                    "shard": pd.Series([], dtype="int64"),
-                    "doc_id": pd.Series([], dtype="int64"),
-                }
-            )
+            ids = [int(d) for d in pdf["doc_id"]]
+            urls = self.searchers[i]._lookup_urls(ids)
+            url = np.array([urls[d] for d in ids], dtype=object)
+            parts.append(pdf.assign(shard=np.int64(i), url=url))
         allp = (
             pd.concat(parts, ignore_index=True)
             .sort_values(

@@ -20,14 +20,27 @@ import json
 import math
 import os
 
+import numpy as np
+import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
 from colbert_spark.index.build import append_index, build_index
 from colbert_spark.oracle import OracleIndex
-from colbert_spark.query.wand import IndexSearcher
+from colbert_spark.query.wand import IndexSearcher, _split_blocks
 
 K = 10
+BLOCK_COLS = [
+    "bucket", "term_id", "first_doc", "last_doc", "max_unit",
+    "doc_bytes", "tf_bytes", "dl_bytes",
+]
+EMPTY_POINT = pd.DataFrame(
+    {
+        "rank": pd.Series([], dtype="int64"),
+        "doc_id": pd.Series([], dtype="int64"),
+        "score": pd.Series([], dtype="float64"),
+    }
+)
 
 
 @pytest.fixture(scope="module")
@@ -462,3 +475,148 @@ def test_point_concurrent_clients_rank_identical(spark, sidx, tiny_queries):
         assert s._block_cache_bytes >= 0
     finally:
         s.close()
+
+
+def test_point_empty_exits_return_canonical_frame(spark, sidx):
+    """Every empty exit of search_point returns the same frame as a
+    non-empty one: rank/doc_id/score int64/int64/float64 over a RangeIndex
+    — blank, all-OOV, fully-OOV require group, exclude removing every
+    match, and the distributed fallback."""
+    d, _, _ = sidx
+    s = IndexSearcher(spark, d)
+    fb = IndexSearcher(spark, d)
+    try:
+        cases = [
+            ("", {}),
+            ("...,,,", {}),
+            ("zzqqxplugh", {}),
+            ("term00001", {"require": "zzqqxplugh"}),
+            ("term00001", {"exclude": "term00001"}),
+        ]
+        for q, kw in cases:
+            got = s.search_point(q, k=K, **kw)
+            pd.testing.assert_frame_equal(
+                got, EMPTY_POINT, check_index_type=True, obj=f"{q!r} {kw}"
+            )
+        fb.point_fetch_max_bytes = 1  # every term degrades to search()
+        got = fb.search_point("term00001", k=K, exclude="term00001")
+        assert fb._block_fetch_jobs == 0 and not fb._block_cache
+        pd.testing.assert_frame_equal(got, EMPTY_POINT, check_index_type=True)
+        # a non-empty answer has the same dtypes and index type
+        hit = s.search_point("term00001", k=K)
+        assert len(hit) > 0
+        pd.testing.assert_frame_equal(
+            hit.iloc[:0], EMPTY_POINT, check_index_type=True
+        )
+    finally:
+        s.close()
+        fb.close()
+
+
+def test_split_blocks_matches_mask_slice():
+    """The per-term split of a collected block table equals a boolean mask
+    slice per term — row order, dtypes, index and byte count — on rows
+    whose terms interleave."""
+    rng = np.random.default_rng(7)
+    n = 400
+    pdf = pd.DataFrame(
+        {
+            "bucket": rng.integers(0, 4, n).astype(np.int32),
+            "term_id": rng.integers(0, 40, n),
+            "first_doc": rng.integers(0, 10_000, n),
+            "max_unit": rng.random(n),
+            "doc_bytes": [bytes(rng.integers(0, 256, i % 9)) for i in range(n)],
+        }
+    )
+    tids = [int(t) for t in rng.permutation(45)]  # 40..44 have no rows
+    for table in (pdf, pdf.iloc[:0]):  # a collect may return no rows
+        out = _split_blocks(table, tids)
+        assert list(out) == tids
+        for t in tids:
+            want = table[table["term_id"] == t].reset_index(drop=True)
+            sub, nb = out[t]
+            pd.testing.assert_frame_equal(sub, want, check_index_type=True)
+            assert nb == int(want.memory_usage(deep=True).sum())
+
+
+def test_prefetch_point_frames_match_mask_slice(spark, sidx):
+    """prefetch_point installs, per term, exactly the rows a boolean mask
+    slice of the collected block table gives, with their byte counts."""
+    d, _, _ = sidx
+    s = IndexSearcher(spark, d).warm()
+    try:
+        n = s.prefetch_point()
+        assert n == len(s._block_cache) > 0
+        ref = (
+            s._warm.filter(F.col("term_id").isin(list(s._block_cache)))
+            .select(*BLOCK_COLS)
+            .toPandas()
+        )
+        total = 0
+        for t, (sub, nb) in s._block_cache.items():
+            want = ref[ref["term_id"] == t].reset_index(drop=True)
+            pd.testing.assert_frame_equal(sub, want, check_index_type=True)
+            assert nb == int(want.memory_usage(deep=True).sum())
+            total += nb
+        assert s._block_cache_bytes == total
+    finally:
+        s.close()
+
+
+def test_prefetch_point_then_search_point_schedules_no_fetch(
+    spark, sidx, tiny_queries
+):
+    """After prefetch_point, search_point answers as a fresh searcher does,
+    and prefetched terms schedule no block-fetch job."""
+    d, _, _ = sidx
+    s = IndexSearcher(spark, d).warm()
+    fresh = IndexSearcher(spark, d)
+    try:
+        s.prefetch_point()
+        jobs = s._block_fetch_jobs
+        for q in tiny_queries["question"][:20]:
+            pd.testing.assert_frame_equal(
+                s.search_point(q, k=K), fresh.search_point(q, k=K), obj=q
+            )
+        assert s._block_fetch_jobs == jobs
+    finally:
+        s.close()
+        fresh.close()
+
+
+def test_prefetch_point_collect_does_not_block_hot_queries(
+    spark, sidx, tiny_queries, monkeypatch
+):
+    """prefetch_point collects outside the point lock: while its block
+    collect is stalled, a cache-hot search_point on another thread still
+    answers."""
+    import threading
+
+    d, _, _ = sidx
+    s = IndexSearcher(spark, d).warm()
+    q = tiny_queries["question"][0]
+    want = s.search_point(q, k=K)  # q's terms are now resident
+    entered, release = threading.Event(), threading.Event()
+    collect = s._collect_blocks
+
+    def stalled_collect(term_ids):
+        entered.set()
+        release.wait(120)
+        return collect(term_ids)
+
+    monkeypatch.setattr(s, "_collect_blocks", stalled_collect)
+    prefetch = threading.Thread(target=s.prefetch_point)
+    prefetch.start()
+    try:
+        assert entered.wait(120), "prefetch_point never reached its collect"
+        got = []
+        hot = threading.Thread(target=lambda: got.append(s.search_point(q, k=K)))
+        hot.start()
+        hot.join(10)
+        assert not hot.is_alive(), "hot search_point waited on the collect"
+        pd.testing.assert_frame_equal(got[0], want)
+    finally:
+        release.set()
+        prefetch.join(120)
+        s.close()
+    assert not prefetch.is_alive()

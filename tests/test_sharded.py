@@ -101,6 +101,14 @@ def test_sharded_searcher_point_matches_batch(spark, uneven_shards, tiny_queries
         assert jobs == [
             (s._dict_lookup_jobs, s._block_fetch_jobs) for s in svc.searchers
         ]
+
+        # an all-OOV question: the 5-column empty frame
+        none = svc.search_point("zzqqxplugh", k=10)
+        assert len(none) == 0
+        assert list(none.dtypes.astype(str).items()) == [
+            ("rank", "int64"), ("url", "object"), ("score", "float64"),
+            ("shard", "int64"), ("doc_id", "int64"),
+        ]
     finally:
         svc.close()
 
