@@ -75,6 +75,7 @@ from typing import NamedTuple
 
 import numpy as np
 import pandas as pd
+import pyarrow.dataset as pads
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -110,6 +111,12 @@ _EMPTY = pd.DataFrame(
         "score": pd.Series([], dtype="float64"),
     }
 )
+
+# the block-table columns the point path keeps per term (`_split_blocks`)
+_BLOCK_COLS = [
+    "bucket", "term_id", "first_doc", "last_doc", "max_unit",
+    "doc_bytes", "tf_bytes", "dl_bytes",
+]
 
 _NO_DOCS = np.empty(0, dtype=np.int64)
 _NO_SCORES = np.empty(0, dtype=np.float64)
@@ -1111,6 +1118,87 @@ def load_index(spark: SparkSession, index_dir: str, as_of_epoch: int | None = No
     return segments, term_dict, stats
 
 
+class SnapshotReader:
+    """Driver-side keyed reads of one snapshot's committed parquet files:
+    the point path's first-touch dictionary, block and url lookups, with no
+    Spark job. Posting lists are columnar, statistics-pruned storage read by
+    a vectorized scan (the columnar inverted index of ICDE 2025): tshard
+    partition directories and parquet row-group statistics prune the files,
+    and Arrow hands the rows to pandas.
+
+    The files are listed HERE, once, from the `stats` `load_index` read —
+    as `spark.read.parquet` lists them there. A searcher is one immutable
+    snapshot: files a later `append_index` commits must stay invisible to
+    it. pyarrow's default `ignore_prefixes` ('.', '_') skip the files Spark
+    skips (dot-tmp, `.crc`, `_SUCCESS`). `as_of_epoch` applies
+    `load_index`'s `first_doc < N` cut."""
+
+    def __init__(self, index_dir: str, stats: dict, as_of_epoch: int | None):
+        def at(key: str, default: str):
+            return pads.dataset(
+                os.path.join(index_dir, stats.get(key, default)),
+                format="parquet",
+                partitioning="hive",
+            )
+
+        self.segments = at("seg_dir", "segments")
+        self.term_dict = at("dict_dir", "term_dict")
+        self.docs = at("docs_dir", "docs")
+        self._tshards = (
+            stats.get("tshards")
+            if "tshard" in self.segments.schema.names
+            else None
+        )
+        self._n = stats["N"] if as_of_epoch is not None else None
+
+    def terms(self, terms: list[str]) -> dict[str, tuple[int, int]]:
+        """term → (term_id, df) for the in-vocabulary members of `terms`."""
+        t = self.term_dict.to_table(
+            columns=["term", "term_id", "df"],
+            filter=pads.field("term").isin(terms),
+        )
+        return {
+            term: (tid, df)
+            for term, tid, df in zip(
+                t["term"].to_pylist(),
+                t["term_id"].to_pylist(),
+                t["df"].to_pylist(),
+            )
+        }
+
+    def blocks(self, term_ids: list[int]) -> pd.DataFrame:
+        """`term_ids`' block rows as `_BLOCK_COLS` (Spark's dtypes: `bucket`
+        is int32 from hive inference on both sides), sorted by (term_id,
+        bucket, first_doc) so the frame never depends on file order."""
+        f = pads.field("term_id").isin(term_ids)
+        if self._tshards:  # directory pruning, as in `pruned_scan`
+            f &= pads.field("tshard").isin(
+                sorted({t % self._tshards for t in term_ids})
+            )
+        if self._n is not None:
+            f &= pads.field("first_doc") < self._n
+        return (
+            self.segments.to_table(columns=_BLOCK_COLS, filter=f)
+            .sort_by(
+                [("term_id", "ascending"), ("bucket", "ascending"),
+                 ("first_doc", "ascending")]
+            )
+            .to_pandas()
+        )
+
+    def urls(self, doc_ids: list[int] | None = None) -> dict[int, str]:
+        """doc_id → url for `doc_ids`, or for every document (None)."""
+        t = self.docs.to_table(
+            columns=["doc_id", "url"],
+            filter=None if doc_ids is None else pads.field("doc_id").isin(doc_ids),
+        )
+        return dict(zip(t["doc_id"].to_pylist(), t["url"].to_pylist()))
+
+    def n_docs(self) -> int:
+        """Rows in the docs files, from their parquet footers alone."""
+        return self.docs.count_rows()
+
+
 class IndexSearcher:
     """Warm/batched query service over one built index.
 
@@ -1142,6 +1230,9 @@ class IndexSearcher:
         self.segments, self.term_dict, self.stats = load_index(
             spark, index_dir, as_of_epoch=as_of_epoch
         )
+        # the point path's first-touch lookups: listed now, next to
+        # `load_index`, so both read the same file set
+        self._reader = SnapshotReader(index_dir, self.stats, as_of_epoch)
         # index-level analysis chain: every query path re-applies the
         # build's token filters so query text and postings agree
         # (functions/analyzer.py)
@@ -1172,8 +1263,8 @@ class IndexSearcher:
         # searcher-lifetime LRU of resolved terms (term → (term_id, df),
         # None = out-of-vocabulary) — sound because this searcher is one
         # immutable snapshot (see `_lookup_terms`). `_dict_lookup_jobs`
-        # counts dictionary-scan jobs so tests/benchmarks can assert a
-        # cache-hot batch schedules none.
+        # counts dictionary reads (cache misses) so tests/benchmarks can
+        # assert a cache-hot batch makes none.
         self._term_cache: OrderedDict[str, tuple[int, int] | None] = OrderedDict()
         self.term_cache_max: int = 1 << 20
         self._dict_lookup_jobs: int = 0
@@ -1189,6 +1280,7 @@ class IndexSearcher:
         )
         self._block_cache_bytes: int = 0
         self.point_cache_bytes: int = 512 << 20
+        # block reads (cache misses) through the snapshot reader
         self._block_fetch_jobs: int = 0
         # decoded-term cache for the point path: tid → {bucket: _TermBlocks}.
         # The _TermBlocks keep their whole-term decoded arrays across
@@ -1232,10 +1324,9 @@ class IndexSearcher:
         self.point_fetch_max_bytes: int = 256 << 20
         # doc_id → url LRU for point-serving result resolution (sharded
         # federation's cross-shard key); misses are one pushed isin filter
-        # on the docs sink, never a full-table collect
+        # on the docs files, never a full-table read
         self._url_cache: OrderedDict[int, str] = OrderedDict()
         self.url_cache_max: int = 1 << 20
-        self._docs_df: DataFrame | None = None
         # prefix → (completions, fetched depth, exhausted) LRU for the
         # interactive autocomplete point path (`complete_point`)
         self._prefix_cache: OrderedDict[
@@ -1314,15 +1405,15 @@ class IndexSearcher:
         """Pre-load the heaviest (top-df) terms' compressed blocks into the
         point LRU during warm-up: a fresh service's first queries hit head
         terms disproportionately (Zipf), and each cold head term otherwise
-        pays a block-fetch job at request time (the measured 42 s/100q cold
-        federated fanout, BENCH_r04). Fills up to `budget_bytes` (default
-        half of `point_cache_bytes`) by the same ~10 B/posting estimate
-        `_fetch_blocks` uses, skipping any term over the per-fetch guard,
-        and fetches in guard-sized slices. Returns the number of terms
-        prefetched. Cost: one dictionary top-df job + a few block fetches —
-        all at warm time, zero at request time. The collects run outside
-        `_point_lock` (the snapshot is immutable, so a slice cannot go
-        stale): point queries never wait on them."""
+        pays a block read at request time. Fills up to `budget_bytes`
+        (default half of `point_cache_bytes`) by the same ~10 B/posting
+        estimate `_fetch_blocks` uses, skipping any term over the per-fetch
+        guard, and reads in guard-sized slices. Returns the number of terms
+        prefetched. Cost: one dictionary top-df Spark job + a few
+        driver-side block reads (`SnapshotReader.blocks`) — all at warm
+        time, none at request time. The reads run outside `_point_lock`
+        (the snapshot is immutable, so a slice cannot go stale): point
+        queries never wait on them."""
         budget = int(
             budget_bytes
             if budget_bytes is not None
@@ -1369,8 +1460,6 @@ class IndexSearcher:
             self._warm.unpersist()
             self._warm = None
             self.term_dict.unpersist()
-        if self._docs_df is not None:
-            self._docs_df.unpersist()  # no-op unless warm() persisted it
         self._term_cache.clear()
         self._block_cache.clear()
         self._block_cache_bytes = 0
@@ -1403,14 +1492,14 @@ class IndexSearcher:
         directory the stats.json commit pointer named at construction, so
         neither hits NOR negative (OOV) entries can go stale — an
         `append_index` produces a NEW dictionary directory that only a new
-        searcher sees. Misses go through ONE pushed `isin` filter on
-        `term_dict` (an InMemoryTableScan after `warm()`, a
-        predicate-pruned parquet scan cold) — never a full-dictionary join,
-        and never a job at all once the working set is cached. Bounded
-        memory: LRU-capped at `term_cache_max` entries regardless of
-        vocabulary size (at web scale the vocabulary dwarfs any driver —
-        the cache holds the query working set, the dictionary stays
-        distributed)."""
+        searcher sees. Misses go through ONE pushed `isin` filter over the
+        dictionary files (`SnapshotReader.terms`, a row-group-pruned
+        driver-side read, no Spark job) — never a full-dictionary join, and
+        no read at all once the working set is cached. The lookup runs
+        outside `_point_lock`; only the install takes it. Bounded memory:
+        LRU-capped at `term_cache_max` entries regardless of vocabulary size
+        (at web scale the vocabulary dwarfs any driver — the cache holds the
+        query working set, the dictionary stays on disk)."""
         out: dict[str, tuple[int, int] | None] = {}
         missing: list[str] = []
         with self._point_lock:
@@ -1422,16 +1511,9 @@ class IndexSearcher:
                 else:
                     missing.append(t)
         if missing:
-            self._dict_lookup_jobs += 1
-            rows = (
-                self.term_dict.filter(F.col("term").isin(missing))
-                .select("term", "term_id", "df")
-                .collect()
-            )
-            found = {
-                r["term"]: (int(r["term_id"]), int(r["df"])) for r in rows
-            }
+            found = self._reader.terms(missing)
             with self._point_lock:
+                self._dict_lookup_jobs += 1
                 for t in missing:
                     v = found.get(t)
                     out[t] = v
@@ -1441,10 +1523,11 @@ class IndexSearcher:
         return out
 
     def _lookup_urls(self, doc_ids: list[int]) -> dict[int, str]:
-        """doc_id → url through an LRU over the docs sink — the federation
+        """doc_id → url through an LRU over the docs files — the federation
         point path's result-resolution step (url is the cross-shard document
         key). Misses are one pushed `isin` filter over the (bounded, k·|Q|)
-        id set; a cache-hot repeat query schedules no job."""
+        id set (`SnapshotReader.urls`, driver-side, no Spark job), read
+        outside `_point_lock`; a cache-hot repeat query reads nothing."""
         out: dict[int, str] = {}
         missing: list[int] = []
         with self._point_lock:
@@ -1454,21 +1537,12 @@ class IndexSearcher:
                     out[d] = self._url_cache[d]
                 else:
                     missing.append(d)
-            if self._docs_df is None and missing:
-                self._docs_df = self.spark.read.parquet(
-                    os.path.join(
-                        self.index_dir, self.stats.get("docs_dir", "docs")
-                    )
-                ).select("doc_id", "url")
         if missing:
-            rows = self._docs_df.filter(
-                F.col("doc_id").isin(missing)
-            ).collect()
+            found = self._reader.urls(missing)
+            out.update(found)
             with self._point_lock:
-                for r in rows:
-                    u = r["url"]
-                    out[int(r["doc_id"])] = u
-                    self._url_cache[int(r["doc_id"])] = u
+                for d, u in found.items():
+                    self._url_cache[d] = u
                     if len(self._url_cache) > self.url_cache_max:
                         self._url_cache.popitem(last=False)
         return out
@@ -2214,11 +2288,12 @@ class IndexSearcher:
         self, term_ids: list[int], df_by_tid: dict[int, int] | None = None
     ) -> bool:
         """Pull the block rows of `term_ids` into the driver-side point LRU.
-        One `toPandas` collect for the MISSING terms — the only Spark job a
-        point query can schedule; a cache-hot query schedules none. The
-        collected bytes are the terms' compressed payloads (on-disk density,
-        ~5-7 B/posting), NOT decoded postings, so even a df=10^6 head term
-        costs single-digit MB. The point lock is held by the caller.
+        One driver-side read of the MISSING terms' rows from the snapshot's
+        segment files (`_collect_blocks`) — no Spark job; a cache-hot query
+        reads nothing. The read bytes are the terms' compressed payloads
+        (on-disk density, ~5-7 B/posting), NOT decoded postings, so even a
+        df=10^6 head term costs single-digit MB. The point lock is held by
+        the caller.
 
         Bounded: with `df_by_tid` (the dictionary df the caller already
         resolved), the fetch size is ESTIMATED before collecting — df ×
@@ -2238,23 +2313,12 @@ class IndexSearcher:
         return True
 
     def _collect_blocks(self, term_ids: list[int]) -> dict[int, tuple]:
-        """One Spark collect of `term_ids`' block rows as block-LRU entries.
-        Takes the point lock only to count the job: `prefetch_point`
-        collects without holding it."""
+        """`term_ids`' block rows as block-LRU entries, read driver-side
+        through the snapshot reader. Takes the point lock only to count the
+        read: `prefetch_point` reads without holding it."""
         with self._point_lock:
             self._block_fetch_jobs += 1
-        src = self._warm
-        if src is None:
-            src = self.pruned_scan(term_ids)
-        pdf = (
-            src.filter(F.col("term_id").isin(term_ids))
-            .select(
-                "bucket", "term_id", "first_doc", "last_doc", "max_unit",
-                "doc_bytes", "tf_bytes", "dl_bytes",
-            )
-            .toPandas()
-        )
-        return _split_blocks(pdf, term_ids)
+        return _split_blocks(self._reader.blocks(term_ids), term_ids)
 
     def _install_blocks(self, frames: dict, current: list[int]) -> None:
         """(Point lock held.) Add entries for terms not yet resident, touch
@@ -2284,12 +2348,15 @@ class IndexSearcher:
         server (``dense_server_client.py:21-66``: query in, top-k out, no
         per-query job scheduling), realized driver-side: tokenize with the
         shared grammar, resolve terms through the searcher-lifetime LRU,
-        pull any uncached terms' block rows once (`_fetch_blocks` — the only
-        possible job), then run the IDENTICAL numpy kernels the distributed
-        path runs (`_score_query_in_bucket` block-max MaxScore, or the dense
-        pass under negation/tombstones) over the cached frames and take the
-        exact global top-k with (score DESC, doc_id ASC) ties. A cache-hot
-        query is pure driver numpy — no Spark job at all, sub-10 ms.
+        pull any uncached terms' dictionary entries and block rows once
+        from the snapshot's parquet files (`SnapshotReader`, driver-side),
+        then run the IDENTICAL numpy kernels the distributed path runs
+        (`_score_query_in_bucket` block-max MaxScore, or the dense pass
+        under negation/tombstones) over the cached frames and take the
+        exact global top-k with (score DESC, doc_id ASC) ties. Neither a
+        first-touch nor a cache-hot query schedules a Spark job; a hot one
+        is pure driver numpy, sub-10 ms. Only the `_point_fallback` exits
+        below run Spark.
 
         Returns a pandas DataFrame (rank, doc_id, score) — rank-identical
         to `search()` on the same snapshot (asserted in tests). An index
@@ -2362,9 +2429,8 @@ class IndexSearcher:
         )
         # one lock spans fetch → decode-cache build → scoring: concurrent
         # clients see consistent LRUs and a shared _DecodeBudget (driver
-        # numpy is GIL-bound anyway; the win of threads is overlapping the
-        # SPARK jobs of cold queries, which release the lock's owner quickly
-        # on the hot path)
+        # numpy is GIL-bound anyway; a first-touch block read holds the lock
+        # for one pruned parquet read, the hot path not at all)
         with self._point_lock:
             # False: a head term too big to collect — degrade below
             if self._fetch_blocks(all_ids, df_by_tid):
@@ -2936,29 +3002,17 @@ class ShardedSearcher:
         fetches that made the round-4 cold fanout 42 s/100q."""
         list(self._pool.map(lambda s: s.warm(), self.searchers))
         if prefetch_point:
-            # resident url map per shard: the point path's result
-            # resolution (`_lookup_urls`) otherwise pays one parquet-scan
-            # job per shard per NOVEL query — measured as the dominant
-            # cold-pass cost once blocks are prefetched. An InMemory scan
-            # turns that into ~ms; the (doc_id, url) projection is
-            # ~40 B/doc of executor cache, which shards by construction.
+            # resident url map per shard: when the whole shard's url map
+            # fits the driver LRU (row count from the parquet footers),
+            # read it ONCE at warm so result resolution (`_lookup_urls`)
+            # never reads per query; above the cap, misses stay one pushed
+            # driver-side read each. The read runs outside the point lock:
+            # a re-warm of a serving federation never stalls its queries.
             def _warm_docs(s: "IndexSearcher") -> None:
-                if s._docs_df is None:
-                    s._docs_df = s.spark.read.parquet(
-                        os.path.join(
-                            s.index_dir, s.stats.get("docs_dir", "docs")
-                        )
-                    ).select("doc_id", "url")
-                s._docs_df = s._docs_df.persist()
-                n = s._docs_df.count()
-                if n <= s.url_cache_max:
-                    # the whole shard's url map fits the driver LRU:
-                    # resolve it ONCE at warm so result resolution never
-                    # schedules a per-query job at all (above the cap, the
-                    # persisted frame keeps misses at InMemory-scan cost)
+                if s._reader.n_docs() <= s.url_cache_max:
+                    urls = s._reader.urls()
                     with s._point_lock:
-                        for r in s._docs_df.collect():
-                            s._url_cache[int(r["doc_id"])] = r["url"]
+                        s._url_cache.update(urls)
 
             list(self._pool.map(_warm_docs, self.searchers))
             heads: set[str] = set()

@@ -13,12 +13,18 @@
    count cannot duplicate (term, bucket, doc) postings.
 5. A pre-segver (v1) index fails at load with a clear rebuild message, not a
    KeyError inside a kernel.
+6. First-touch point reads go through the driver-side `SnapshotReader`: it
+   lists exactly the files Spark lists for the snapshot, a stale searcher
+   never sees a later append, and a first-touch `search_point` touches no
+   Spark object at all.
 """
 
 import glob
 import json
 import math
 import os
+import shutil
+from urllib.parse import unquote, urlparse
 
 import numpy as np
 import pandas as pd
@@ -171,8 +177,6 @@ def test_append_scrubs_crashed_epoch_orphans(spark, tmp_path, tiny_queries):
     input is a 2-epoch index compacted with preserve_epochs=True: compaction
     writes every epoch's blocks to one `p*.e0.parquet` per cell, so the
     scrub must remove only the orphan, never compacted data."""
-    import shutil
-
     from colbert_spark.index.compact import compact_index
 
     qdf = spark.createDataFrame(
@@ -202,6 +206,9 @@ def test_append_scrubs_crashed_epoch_orphans(spark, tmp_path, tiny_queries):
                                      "*.e0.parquet"))[0]
         shutil.copy(src, orphan_seg)
         shutil.copy(glob.glob(os.path.join(d, "docs", "*.parquet"))[0], orphan_doc)
+        # a searcher opened before the scrub lists the orphans exactly as
+        # Spark does
+        _assert_reader_lists_spark_files(spark, IndexSearcher(spark, d))
         append_index(spark, _mini_pages(spark, lo, lo + 150), d)
         assert not os.path.exists(orphan_seg)
         assert not os.path.exists(orphan_doc)
@@ -212,6 +219,14 @@ def test_append_scrubs_crashed_epoch_orphans(spark, tmp_path, tiny_queries):
         a = IndexSearcher(spark, d).search(qdf, k=K).collect()
         b = IndexSearcher(spark, fresh).search(qdf, k=K).collect()
         assert key(a) == key(b), f"compacted={compacted}"
+        # and the point path reads the scrubbed files the same way
+        pt = IndexSearcher(spark, d)
+        for qid, q in ((0, "alpha gamma"), (1, "beta doc 0301")):
+            got = [
+                (qid, int(r.rank), int(r.doc_id), round(r.score, 9))
+                for r in pt.search_point(q, k=K).itertuples()
+            ]
+            assert got == [x for x in key(b) if x[0] == qid], (compacted, q)
 
 
 def test_v1_index_fails_load_with_clear_error(spark, tmp_path):
@@ -541,7 +556,10 @@ def test_split_blocks_matches_mask_slice():
 
 def test_prefetch_point_frames_match_mask_slice(spark, sidx):
     """prefetch_point installs, per term, exactly the rows a boolean mask
-    slice of the collected block table gives, with their byte counts."""
+    slice of the Spark-collected block table gives, in (bucket, first_doc)
+    order, with their byte counts. (The reference is sorted because a
+    collect's row order is Spark's partition order; the snapshot reader's
+    frames are sorted by (term_id, bucket, first_doc).)"""
     d, _, _ = sidx
     s = IndexSearcher(spark, d).warm()
     try:
@@ -554,7 +572,11 @@ def test_prefetch_point_frames_match_mask_slice(spark, sidx):
         )
         total = 0
         for t, (sub, nb) in s._block_cache.items():
-            want = ref[ref["term_id"] == t].reset_index(drop=True)
+            want = (
+                ref[ref["term_id"] == t]
+                .sort_values(["bucket", "first_doc"])
+                .reset_index(drop=True)
+            )
             pd.testing.assert_frame_equal(sub, want, check_index_type=True)
             assert nb == int(want.memory_usage(deep=True).sum())
             total += nb
@@ -620,3 +642,120 @@ def test_prefetch_point_collect_does_not_block_hot_queries(
         prefetch.join(120)
         s.close()
     assert not prefetch.is_alive()
+
+
+def _files(paths) -> set[str]:
+    return {os.path.normpath(unquote(urlparse(p).path)) for p in paths}
+
+
+def _assert_reader_lists_spark_files(spark, s: IndexSearcher) -> None:
+    """The snapshot reader's segment, dictionary and docs file sets equal
+    the ones Spark listed for the same searcher."""
+    r = s._reader
+    assert _files(r.segments.files) == _files(s.segments.inputFiles())
+    assert _files(r.term_dict.files) == _files(s.term_dict.inputFiles())
+    docs = os.path.join(s.index_dir, s.stats.get("docs_dir", "docs"))
+    assert _files(r.docs.files) == _files(spark.read.parquet(docs).inputFiles())
+
+
+@pytest.fixture(scope="module")
+def snapshots(spark, tiny_corpus, sidx, tmp_path_factory):
+    """name → (index dir, as_of_epoch): a plain build, an appended index
+    (live and as of epoch 0), a small-tombstone copy of it, and a copy
+    compacted with its deletes expunged."""
+    from colbert_spark.index.compact import compact_index
+    from colbert_spark.index.delete import delete_docs
+
+    root = tmp_path_factory.mktemp("idx_snap")
+    app, tomb, comp = (str(root / n) for n in ("app", "tomb", "comp"))
+    cut = len(tiny_corpus) * 7 // 10
+    build_index(
+        spark, spark.createDataFrame(tiny_corpus.iloc[:cut]), app,
+        bucket_size=127,
+    )
+    append_index(spark, spark.createDataFrame(tiny_corpus.iloc[cut:]), app)
+    shutil.copytree(app, tomb)
+    victims = spark.createDataFrame([(i,) for i in range(0, 1000, 37)], "doc_id long")
+    delete_docs(spark, tomb, victims)
+    shutil.copytree(tomb, comp)
+    compact_index(spark, comp, expunge_deletes=True)
+    return {
+        "live": (sidx[0], None),
+        "appended": (app, None),
+        "as_of_0": (app, 0),
+        "tombstoned": (tomb, None),
+        "compacted": (comp, None),
+    }
+
+
+SNAPSHOTS = ["live", "appended", "as_of_0", "tombstoned", "compacted"]
+
+
+@pytest.mark.parametrize("snap", SNAPSHOTS)
+def test_snapshot_reader_lists_spark_file_set(spark, snapshots, snap):
+    d, epoch = snapshots[snap]
+    _assert_reader_lists_spark_files(spark, IndexSearcher(spark, d, as_of_epoch=epoch))
+
+
+def test_stale_searcher_point_read_ignores_later_append(spark, tmp_path):
+    """A searcher is the snapshot it was opened on: after an append, its
+    first-touch search_point still equals its own search() and the
+    pre-append answer — the reader lists files at construction, as
+    Spark does, not at the first lookup."""
+    d = str(tmp_path / "idx_stale")
+    build_index(spark, _mini_pages(spark, 0, 300), d, bucket_size=64)
+    q = "gamma alpha"
+    before = IndexSearcher(spark, d).search_point(q, k=1000)
+    s = IndexSearcher(spark, d)
+    append_index(spark, _mini_pages(spark, 300, 450), d)
+    got = s.search_point(q, k=1000)
+    assert len(got) == 300 and int(got["doc_id"].max()) < 300
+    pd.testing.assert_frame_equal(got, before)
+    qdf = spark.createDataFrame([(0, q)], "qid long, question string")
+    dist = sorted(s.search(qdf, k=1000).collect(), key=lambda r: r["rank"])
+    assert [int(x) for x in got["doc_id"]] == [r["doc_id"] for r in dist]
+
+
+class _NoSpark:
+    """Stands in for a searcher's Spark objects: any use raises."""
+
+    def __init__(self, name: str):
+        self._name = name
+
+    def __getattr__(self, attr):
+        raise AssertionError(f"first-touch point read used {self._name}.{attr}")
+
+
+@pytest.mark.parametrize("snap", SNAPSHOTS)
+def test_first_touch_point_reads_need_no_spark(spark, snapshots, snap, tiny_queries):
+    """On a fresh searcher with its Spark session and DataFrames replaced by
+    sentinels, first-touch search_point answers every query class (head,
+    tail, mixed, duplicate, absent term; must_not; require) exactly as
+    search() on an untouched twin searcher: rank, doc_id, score to rel
+    1e-9."""
+    d, epoch = snapshots[snap]
+    qs = [(q, None, None) for q in tiny_queries["question"][:10]]
+    qs += [
+        ("term00001 term00002", "term00003", None),
+        ("term00001 term00002", None, "term00002"),
+    ]
+    qdf = spark.createDataFrame(
+        [(i, q, ex, rq) for i, (q, ex, rq) in enumerate(qs)],
+        "qid long, question string, exclude string, require string",
+    )
+    want: dict[int, list] = {}
+    twin = IndexSearcher(spark, d, as_of_epoch=epoch)
+    for r in sorted(twin.search(qdf, k=K).collect(), key=lambda r: r["rank"]):
+        want.setdefault(r["qid"], []).append(r)
+    s = IndexSearcher(spark, d, as_of_epoch=epoch)
+    for attr in ("spark", "segments", "term_dict"):
+        setattr(s, attr, _NoSpark(attr))
+    for i, (q, ex, rq) in enumerate(qs):
+        got = s.search_point(q, k=K, exclude=ex, require=rq)
+        exp = want.get(i, [])
+        assert list(got["rank"]) == [r["rank"] for r in exp], (snap, q)
+        assert list(got["doc_id"]) == [r["doc_id"] for r in exp], (snap, q)
+        for gs, r in zip(got["score"], exp):
+            assert math.isclose(gs, r["score"], rel_tol=1e-9), (snap, q)
+    # the reads happened, through the reader (miss counters moved)
+    assert s._dict_lookup_jobs >= 1 and s._block_fetch_jobs >= 1

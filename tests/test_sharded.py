@@ -439,3 +439,48 @@ def test_warm_prefetch_makes_head_point_queries_fetch_free(
         assert [s._dict_lookup_jobs for s in svc.searchers] == dict0
     finally:
         svc.close()
+
+
+def test_warm_url_read_does_not_block_hot_point_queries(
+    spark, uneven_shards, tiny_queries, monkeypatch
+):
+    """ShardedSearcher.warm reads each shard's url map outside the point
+    lock: while one shard's read is stalled, a cache-hot search_point on
+    that shard still answers from another thread."""
+    import threading
+
+    import pandas as pd
+
+    from colbert_spark.query.wand import ShardedSearcher
+
+    a, b_, _ = uneven_shards
+    svc = ShardedSearcher(spark, [a, b_])
+    s0 = svc.searchers[0]
+    q = tiny_queries["question"][0]
+    want = s0.search_point(q, k=10)  # q's terms are now resident
+    entered, release = threading.Event(), threading.Event()
+    read = s0._reader.urls
+
+    def stalled_read(doc_ids=None):
+        entered.set()
+        release.wait(120)
+        return read(doc_ids)
+
+    monkeypatch.setattr(s0._reader, "urls", stalled_read)
+    warm = threading.Thread(target=svc.warm)
+    warm.start()
+    try:
+        assert entered.wait(120), "warm never reached the url read"
+        got = []
+        hot = threading.Thread(target=lambda: got.append(s0.search_point(q, k=10)))
+        hot.start()
+        hot.join(10)
+        assert not hot.is_alive(), "hot search_point waited on the url read"
+        pd.testing.assert_frame_equal(got[0], want)
+    finally:
+        release.set()
+        warm.join(300)
+        svc.close()
+    assert not warm.is_alive()
+    # the whole url map was installed once the read was released
+    assert len(s0._url_cache) == s0._reader.n_docs()
