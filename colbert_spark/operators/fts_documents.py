@@ -7,6 +7,11 @@ Every query has a DuckDB oracle built from the SAME tokenizer grammar
 compare is an independent cross-engine rank-identity check. Scores are ranked
 on round(score, 9) in BOTH engines (kills float-summation-order rank flips on
 mathematically-tied scores) and output rounded to 4 decimals.
+
+On the Spark side the BM25 formula lives once, in `query/bm25.py` (`idf_col`,
+`bm25_col`, `bm25_score_col`): every corpus-scan operator takes its postings,
+df and (N, avgdl) from `_corpus_model` and its per-posting contributions from
+`_contribs`, keeping only its own filters and joins.
 """
 
 from __future__ import annotations
@@ -16,6 +21,7 @@ from pyspark.sql import functions as F
 
 from colbert_spark.functions.tokenizer import duckdb_tokens_sql, tokens_col
 from colbert_spark.oracle import B_DEFAULT, K1_DEFAULT
+from colbert_spark.query.bm25 import bm25_col, bm25_score_col, idf_col, query_terms_df
 from colbert_spark.sources.tables import load_table
 
 # the fixed "reference query set" for the documents corpus
@@ -40,6 +46,41 @@ def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _postings(docs: DataFrame) -> DataFrame:
+    """Tokenized docs → lazy corpus postings (term, doc_id, doclen, tf)."""
+    return (
+        docs.select("doc_id", "doclen", F.explode("terms").alias("term"))
+        .groupBy("term", "doc_id", "doclen")
+        .agg(F.count("*").alias("tf"))
+    )
+
+
+def _corpus_model(docs: DataFrame) -> tuple[DataFrame, DataFrame, int, float]:
+    """The corpus-scan BM25 model of tokenized `docs`: (postings,
+    tstats(term, df), N, avgdl), N and avgdl from one collect over the
+    cached docs."""
+    docs = docs.cache()
+    row = docs.agg(F.count("*").alias("n"), F.avg("doclen").alias("avgdl")).collect()[0]
+    posts = _postings(docs)
+    tstats = posts.groupBy("term").agg(F.count("*").alias("df"))
+    return posts, tstats, row["n"], row["avgdl"]
+
+
+def _contribs(
+    posts: DataFrame, qterms: DataFrame, n_docs: int, avgdl: float
+) -> DataFrame:
+    """posts ⋈ broadcast(qterms(qid, term, qtf, df)) plus each posting's
+    BM25 `contrib` — the one formula, `query/bm25.py:bm25_score_col`."""
+    return posts.join(F.broadcast(qterms), "term").withColumn(
+        "contrib", bm25_score_col(K1_DEFAULT, B_DEFAULT, n_docs, avgdl)
+    )
+
+
+def _bm25_scores(contribs: DataFrame) -> DataFrame:
+    """(qid, doc_id, score): Σ contrib per query and doc."""
+    return contribs.groupBy("qid", "doc_id").agg(F.sum("contrib").alias("score"))
+
+
 def fts_doclen(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _docs(spark, sf_dir).select("doc_id", F.col("doclen").cast("long").alias("doclen"))
 
@@ -53,14 +94,9 @@ def fts_collection_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def fts_term_df(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = _docs(spark, sf_dir)
-    posts = (
-        docs.select("doc_id", F.explode("terms").alias("term"))
-        .groupBy("term", "doc_id")
-        .agg(F.count("*").alias("tf"))
-    )
     return (
-        posts.groupBy("term")
+        _postings(_docs(spark, sf_dir))
+        .groupBy("term")
         .agg(F.count("*").alias("df"), F.sum("tf").alias("cf"))
         .orderBy(F.desc("df"), F.asc("term"))
         .limit(30)
@@ -109,15 +145,9 @@ def _fts_bm25_topk(
     override the default corpus tokenization / query set, and `analyzer`
     applies an analysis chain to the QUERY tokens (analyzer entries pass
     pre-analyzed `docs`)."""
-    docs = (docs if docs is not None else _docs(spark, sf_dir)).cache()
-    row = docs.agg(F.count("*").alias("n"), F.avg("doclen").alias("avgdl")).collect()[0]
-    n_docs, avgdl = row["n"], row["avgdl"]
-    posts = (
-        docs.select("doc_id", "doclen", F.explode("terms").alias("term"))
-        .groupBy("term", "doc_id", "doclen")
-        .agg(F.count("*").alias("tf"))
+    posts, tstats, n_docs, avgdl = _corpus_model(
+        docs if docs is not None else _docs(spark, sf_dir)
     )
-    tstats = posts.groupBy("term").agg(F.count("*").alias("df"))
     if allowed is not None:
         posts = posts.join(allowed.select("doc_id"), "doc_id", "leftsemi")
     queries = (
@@ -133,25 +163,8 @@ def _fts_bm25_topk(
         .groupBy("qid", "term")
         .agg(F.count("*").alias("qtf"))
     )
-    joined = posts.join(F.broadcast(qt.join(tstats, "term")), "term")
-    idf = F.log(
-        F.lit(1.0) + (F.lit(float(n_docs)) - F.col("df") + 0.5) / (F.col("df") + 0.5)
-    )
-    k1, b = K1_DEFAULT, B_DEFAULT
-    tf = F.col("tf").cast("double")
-    contrib = (
-        F.col("qtf")
-        * idf
-        * tf
-        * (k1 + 1.0)
-        / (tf + k1 * (1.0 - b + b * F.col("doclen") / F.lit(float(avgdl))))
-    )
-    agg = (
-        joined.withColumn("contrib", contrib)
-        .groupBy("qid", "doc_id")
-        .agg(F.sum("contrib").alias("score"))
-    )
-    return _rank_topk(agg, k, offset=page_offset)
+    scores = _bm25_scores(_contribs(posts, qt.join(tstats, "term"), n_docs, avgdl))
+    return _rank_topk(scores, k, offset=page_offset)
 
 
 def fts_topk_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -223,39 +236,14 @@ def fts_boolean_and(spark: SparkSession, sf_dir: str) -> DataFrame:
     plan, the conjunction is a post-aggregation filter on matched-term count
     so no extra exchange is added. A query with an out-of-vocabulary term
     (qid 6) correctly returns nothing."""
-    docs = _docs(spark, sf_dir).cache()
-    row = docs.agg(F.count("*").alias("n"), F.avg("doclen").alias("avgdl")).collect()[0]
-    n_docs, avgdl = row["n"], row["avgdl"]
-    posts = (
-        docs.select("doc_id", "doclen", F.explode("terms").alias("term"))
-        .groupBy("term", "doc_id", "doclen")
-        .agg(F.count("*").alias("tf"))
-    )
-    tstats = posts.groupBy("term").agg(F.count("*").alias("df"))
+    posts, tstats, n_docs, avgdl = _corpus_model(_docs(spark, sf_dir))
     queries = spark.createDataFrame(DOC_QUERIES, "qid long, question string")
-    qt = (
-        queries.select("qid", F.explode(tokens_col("question")).alias("term"))
-        .groupBy("qid", "term")
-        .agg(F.count("*").alias("qtf"))
-    )
+    qt = query_terms_df(queries)
     n_req = qt.groupBy("qid").agg(F.count("*").alias("n_req"))
-    joined = posts.join(F.broadcast(qt.join(tstats, "term")), "term")
-    idf = F.log(
-        F.lit(1.0) + (F.lit(float(n_docs)) - F.col("df") + 0.5) / (F.col("df") + 0.5)
-    )
-    k1, b = K1_DEFAULT, B_DEFAULT
-    tf = F.col("tf").cast("double")
-    contrib = (
-        F.col("qtf")
-        * idf
-        * tf
-        * (k1 + 1.0)
-        / (tf + k1 * (1.0 - b + b * F.col("doclen") / F.lit(float(avgdl))))
-    )
     # joined rows are unique per (qid, doc_id, term) ⇒ count(*) is the number
     # of DISTINCT query terms this doc matched
     agg = (
-        joined.withColumn("contrib", contrib)
+        _contribs(posts, qt.join(tstats, "term"), n_docs, avgdl)
         .groupBy("qid", "doc_id")
         .agg(F.sum("contrib").alias("score"), F.count("*").alias("n_matched"))
         .join(F.broadcast(n_req), "qid")
@@ -417,48 +405,29 @@ def fts_phrase_bm25(spark: SparkSession, sf_dir: str) -> DataFrame:
     out-of-vocabulary token is dropped (it cannot match)."""
     from colbert_spark.operators.dedup import shingles_col
 
-    docs = (
-        _docs(spark, sf_dir)
-        .withColumn("bigrams", shingles_col(F.col("terms"), n=2))
-        .cache()
-    )
-    row = docs.agg(F.count("*").alias("n"), F.avg("doclen").alias("avgdl")).collect()[0]
-    n_docs, avgdl = row["n"], row["avgdl"]
-    df_t = (
-        docs.select("doc_id", F.explode(F.array_distinct("terms")).alias("term"))
-        .groupBy("term")
-        .agg(F.count("*").alias("df"))
-    )
+    docs = _docs(spark, sf_dir)
+    _, tstats, n_docs, avgdl = _corpus_model(docs)
     phrases = spark.createDataFrame(DOC_PHRASES, "qid long, phrase string")
     pterms = phrases.select(
         "qid", "phrase", F.explode(F.split("phrase", " ")).alias("term")
-    )
-    idf = F.log(
-        F.lit(1.0) + (F.lit(float(n_docs)) - F.col("df") + 0.5) / (F.col("df") + 0.5)
     )
     # idf_sum only for phrases whose EVERY token is in the vocabulary; the
     # inner df join drops OOV tokens, so require the full token count back
     n_terms = pterms.groupBy("qid").agg(F.count("*").alias("n_terms"))
     pidf = (
-        pterms.join(df_t, "term")
+        pterms.join(tstats, "term")
         .groupBy("qid", "phrase")
-        .agg(F.sum(idf).alias("idf_sum"), F.count("*").alias("n_found"))
+        .agg(F.sum(idf_col(n_docs)).alias("idf_sum"), F.count("*").alias("n_found"))
         .join(n_terms, "qid")
         .filter(F.col("n_found") == F.col("n_terms"))
         .select("qid", "phrase", "idf_sum")
     )
-    joined = docs.crossJoin(F.broadcast(pidf))
     n_occ = F.size(F.filter("bigrams", lambda x: x == F.col("phrase")))
-    k1, b = K1_DEFAULT, B_DEFAULT
-    tf = F.col("n_occ").cast("double")
-    score = (
-        F.col("idf_sum")
-        * tf
-        * (k1 + 1.0)
-        / (tf + k1 * (1.0 - b + b * F.col("doclen") / F.lit(float(avgdl))))
-    )
+    score = bm25_col(F.col("idf_sum"), F.col("n_occ"), K1_DEFAULT, B_DEFAULT, avgdl)
     scored = (
-        joined.select(
+        docs.withColumn("bigrams", shingles_col(F.col("terms"), n=2))
+        .crossJoin(F.broadcast(pidf))
+        .select(
             "qid", "doc_id", "doclen", "idf_sum", n_occ.cast("long").alias("n_occ")
         )
         .filter(F.col("n_occ") > 0)
@@ -879,19 +848,11 @@ def _fts_lmd_scored(spark: SparkSession, sf_dir: str) -> DataFrame:
     the pre-cut frame shared by `fts_lmd_topk` and the RRF fusion."""
     docs = _docs(spark, sf_dir).cache()
     c_total = float(docs.agg(F.sum("doclen")).collect()[0][0])
-    posts = (
-        docs.select("doc_id", "doclen", F.explode("terms").alias("term"))
-        .groupBy("term", "doc_id", "doclen")
-        .agg(F.count("*").alias("tf"))
-    )
+    posts = _postings(docs)
     cfs = posts.groupBy("term").agg(F.sum("tf").alias("cf"))
     queries = spark.createDataFrame(DOC_QUERIES, "qid long, question string")
-    qt = (
-        queries.select("qid", F.explode(tokens_col("question")).alias("term"))
-        .groupBy("qid", "term")
-        .agg(F.count("*").alias("qtf"))
-    )
-    qv = qt.join(cfs, "term")  # query terms present in the collection vocab
+    # query terms present in the collection vocab
+    qv = query_terms_df(queries).join(cfs, "term")
     mu = LMD_MU
     ml = F.col("qtf") * F.log1p(
         F.col("tf") / (F.lit(mu) * F.col("cf") / F.lit(c_total))
@@ -951,33 +912,11 @@ def fts_msm_bm25(spark: SparkSession, sf_dir: str) -> DataFrame:
     minimum_should_match between pure disjunction and boolean-AND).
     Single-term queries cannot meet the threshold and return nothing.
     Exact-semantics oracle for the index path (`fts_msm_index`)."""
-    docs = _docs(spark, sf_dir).cache()
-    row = docs.agg(F.count("*").alias("n"), F.avg("doclen").alias("avgdl")).collect()[0]
-    n_docs, avgdl = row["n"], row["avgdl"]
-    posts = (
-        docs.select("doc_id", "doclen", F.explode("terms").alias("term"))
-        .groupBy("term", "doc_id", "doclen")
-        .agg(F.count("*").alias("tf"))
-    )
-    tstats = posts.groupBy("term").agg(F.count("*").alias("df"))
+    posts, tstats, n_docs, avgdl = _corpus_model(_docs(spark, sf_dir))
     queries = spark.createDataFrame(DOC_QUERIES, "qid long, question string")
-    qt = (
-        queries.select("qid", F.explode(tokens_col("question")).alias("term"))
-        .groupBy("qid", "term")
-        .agg(F.count("*").alias("qtf"))
-    )
-    joined = posts.join(F.broadcast(qt.join(tstats, "term")), "term")
-    idf = F.log(
-        F.lit(1.0) + (F.lit(float(n_docs)) - F.col("df") + 0.5) / (F.col("df") + 0.5)
-    )
-    k1, b = K1_DEFAULT, B_DEFAULT
-    tf = F.col("tf").cast("double")
-    contrib = (
-        F.col("qtf") * idf * tf * (k1 + 1.0)
-        / (tf + k1 * (1.0 - b + b * F.col("doclen") / F.lit(float(avgdl))))
-    )
+    qt = query_terms_df(queries)
     agg = (
-        joined.withColumn("contrib", contrib)
+        _contribs(posts, qt.join(tstats, "term"), n_docs, avgdl)
         .groupBy("qid", "doc_id")
         .agg(
             F.sum("contrib").alias("score"),
@@ -1181,36 +1120,13 @@ def _expanded_bm25_scan(spark, sf_dir, patterns, cond_fn) -> DataFrame:
     expansion is a broadcast theta-join of the tiny pattern table against
     per-term stats — the big postings table still joins on plain `term`
     equality."""
-    docs = _docs(spark, sf_dir).cache()
-    row = docs.agg(F.count("*").alias("n"), F.avg("doclen").alias("avgdl")).collect()[0]
-    n_docs, avgdl = row["n"], row["avgdl"]
-    posts = (
-        docs.select("doc_id", "doclen", F.explode("terms").alias("term"))
-        .groupBy("term", "doc_id", "doclen")
-        .agg(F.count("*").alias("tf"))
-    )
-    tstats = posts.groupBy("term").agg(F.count("*").alias("df"))
+    posts, tstats, n_docs, avgdl = _corpus_model(_docs(spark, sf_dir))
     expanded = (
         tstats.join(F.broadcast(patterns), cond_fn(tstats, patterns))
         .groupBy("qid", "term")
         .agg(F.sum("qtf").alias("qtf"), F.first("df").alias("df"))
     )
-    joined = posts.join(F.broadcast(expanded), "term")
-    idf = F.log(
-        F.lit(1.0) + (F.lit(float(n_docs)) - F.col("df") + 0.5) / (F.col("df") + 0.5)
-    )
-    k1, b = K1_DEFAULT, B_DEFAULT
-    tf = F.col("tf").cast("double")
-    contrib = (
-        F.col("qtf") * idf * tf * (k1 + 1.0)
-        / (tf + k1 * (1.0 - b + b * F.col("doclen") / F.lit(float(avgdl))))
-    )
-    agg = (
-        joined.withColumn("contrib", contrib)
-        .groupBy("qid", "doc_id")
-        .agg(F.sum("contrib").alias("score"))
-    )
-    return _rank_topk(agg)
+    return _rank_topk(_bm25_scores(_contribs(posts, expanded, n_docs, avgdl)))
 
 
 def _expanded_bm25_index(spark, sf_dir, patterns, cond_fn) -> DataFrame:
@@ -1339,23 +1255,11 @@ def fts_not_bm25(spark: SparkSession, sf_dir: str) -> DataFrame:
     excluded terms. The per-qid exclusion set is a tiny broadcast join of
     the negated-term table against postings, anti-joined after
     aggregation. Exact-semantics oracle for `fts_not_index`."""
-    docs = _docs(spark, sf_dir).cache()
-    row = docs.agg(F.count("*").alias("n"), F.avg("doclen").alias("avgdl")).collect()[0]
-    n_docs, avgdl = row["n"], row["avgdl"]
-    posts = (
-        docs.select("doc_id", "doclen", F.explode("terms").alias("term"))
-        .groupBy("term", "doc_id", "doclen")
-        .agg(F.count("*").alias("tf"))
-    )
-    tstats = posts.groupBy("term").agg(F.count("*").alias("df"))
+    posts, tstats, n_docs, avgdl = _corpus_model(_docs(spark, sf_dir))
     queries = spark.createDataFrame(
         NOT_QUERIES, "qid long, question string, exclude string"
     )
-    qt = (
-        queries.select("qid", F.explode(tokens_col("question")).alias("term"))
-        .groupBy("qid", "term")
-        .agg(F.count("*").alias("qtf"))
-    )
+    qt = query_terms_df(queries)
     nt = queries.select(
         "qid", F.explode(tokens_col("exclude")).alias("term")
     ).distinct()
@@ -1365,23 +1269,8 @@ def fts_not_bm25(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("qid", "doc_id")
         .distinct()
     )
-    joined = posts.join(F.broadcast(qt.join(tstats, "term")), "term")
-    idf = F.log(
-        F.lit(1.0) + (F.lit(float(n_docs)) - F.col("df") + 0.5) / (F.col("df") + 0.5)
-    )
-    k1, b = K1_DEFAULT, B_DEFAULT
-    tf = F.col("tf").cast("double")
-    contrib = (
-        F.col("qtf") * idf * tf * (k1 + 1.0)
-        / (tf + k1 * (1.0 - b + b * F.col("doclen") / F.lit(float(avgdl))))
-    )
-    agg = (
-        joined.withColumn("contrib", contrib)
-        .groupBy("qid", "doc_id")
-        .agg(F.sum("contrib").alias("score"))
-        .join(excl, ["qid", "doc_id"], "left_anti")
-    )
-    return _rank_topk(agg)
+    scores = _bm25_scores(_contribs(posts, qt.join(tstats, "term"), n_docs, avgdl))
+    return _rank_topk(scores.join(excl, ["qid", "doc_id"], "left_anti"))
 
 
 def fts_not_index(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1478,22 +1367,14 @@ def _mlt_seed_terms(spark: SparkSession, sf_dir: str):
     Term selection reads only the seed docs' term vectors plus the global
     df table — the Lucene MoreLikeThis interesting-terms stage."""
     docs = _docs(spark, sf_dir)
-    row = docs.agg(F.count("*").alias("n")).collect()[0]
-    n_docs = row["n"]
-    posts = (
-        docs.select("doc_id", F.explode("terms").alias("term"))
-        .groupBy("term", "doc_id")
-        .agg(F.count("*").alias("tf"))
-    )
+    n_docs = docs.count()
+    posts = _postings(docs)
     tstats = posts.groupBy("term").agg(F.count("*").alias("df"))
-    idf = F.log(
-        F.lit(1.0) + (F.lit(float(n_docs)) - F.col("df") + 0.5) / (F.col("df") + 0.5)
-    )
     seed_posts = posts.filter(F.col("doc_id").isin(list(MLT_SEEDS))).join(
         tstats, "term"
     )
     w = Window.partitionBy("doc_id").orderBy(
-        F.desc(F.round(F.col("tf") * idf, 9)), F.asc("term")
+        F.desc(F.round(F.col("tf") * idf_col(n_docs), 9)), F.asc("term")
     )
     return (
         seed_posts.withColumn("rn", F.row_number().over(w))
@@ -1507,34 +1388,10 @@ def fts_mlt(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc's top tf·idf terms form a disjunctive query (qtf 1 each); BM25
     top-10 over the rest of the corpus, the seed itself excluded. qid = the
     seed doc_id. Exact-semantics oracle for `fts_mlt_index`."""
-    docs = _docs(spark, sf_dir).cache()
-    row = docs.agg(F.count("*").alias("n"), F.avg("doclen").alias("avgdl")).collect()[0]
-    n_docs, avgdl = row["n"], row["avgdl"]
-    posts = (
-        docs.select("doc_id", "doclen", F.explode("terms").alias("term"))
-        .groupBy("term", "doc_id", "doclen")
-        .agg(F.count("*").alias("tf"))
-    )
-    tstats = posts.groupBy("term").agg(F.count("*").alias("df"))
+    posts, tstats, n_docs, avgdl = _corpus_model(_docs(spark, sf_dir))
     qt = _mlt_seed_terms(spark, sf_dir).withColumn("qtf", F.lit(1).cast("long"))
-    joined = posts.join(F.broadcast(qt.join(tstats, "term")), "term").filter(
-        F.col("doc_id") != F.col("qid")
-    )
-    idf = F.log(
-        F.lit(1.0) + (F.lit(float(n_docs)) - F.col("df") + 0.5) / (F.col("df") + 0.5)
-    )
-    k1, b = K1_DEFAULT, B_DEFAULT
-    tf = F.col("tf").cast("double")
-    contrib = (
-        F.col("qtf") * idf * tf * (k1 + 1.0)
-        / (tf + k1 * (1.0 - b + b * F.col("doclen") / F.lit(float(avgdl))))
-    )
-    agg = (
-        joined.withColumn("contrib", contrib)
-        .groupBy("qid", "doc_id")
-        .agg(F.sum("contrib").alias("score"))
-    )
-    return _rank_topk(agg)
+    contribs = _contribs(posts, qt.join(tstats, "term"), n_docs, avgdl)
+    return _rank_topk(_bm25_scores(contribs.filter(F.col("doc_id") != F.col("qid"))))
 
 
 def fts_mlt_index(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1670,38 +1527,12 @@ def fts_collapse(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Field collapse / grouped top-k by corpus scan (the Lucene grouping
     analog): the best GROUP_K BM25 docs per (query, lang). Exact-semantics
     oracle for `fts_collapse_index`."""
-    docs = _docs(spark, sf_dir).cache()
-    row = docs.agg(F.count("*").alias("n"), F.avg("doclen").alias("avgdl")).collect()[0]
-    n_docs, avgdl = row["n"], row["avgdl"]
-    posts = (
-        docs.select("doc_id", "doclen", F.explode("terms").alias("term"))
-        .groupBy("term", "doc_id", "doclen")
-        .agg(F.count("*").alias("tf"))
-    )
-    tstats = posts.groupBy("term").agg(F.count("*").alias("df"))
+    posts, tstats, n_docs, avgdl = _corpus_model(_docs(spark, sf_dir))
     queries = spark.createDataFrame(DOC_QUERIES, "qid long, question string")
-    qt = (
-        queries.select("qid", F.explode(tokens_col("question")).alias("term"))
-        .groupBy("qid", "term")
-        .agg(F.count("*").alias("qtf"))
-    )
-    joined = posts.join(F.broadcast(qt.join(tstats, "term")), "term")
-    idf = F.log(
-        F.lit(1.0) + (F.lit(float(n_docs)) - F.col("df") + 0.5) / (F.col("df") + 0.5)
-    )
-    k1, b = K1_DEFAULT, B_DEFAULT
-    tf = F.col("tf").cast("double")
-    contrib = (
-        F.col("qtf") * idf * tf * (k1 + 1.0)
-        / (tf + k1 * (1.0 - b + b * F.col("doclen") / F.lit(float(avgdl))))
-    )
-    agg = (
-        joined.withColumn("contrib", contrib)
-        .groupBy("qid", "doc_id")
-        .agg(F.sum("contrib").alias("score"))
-        .join(load_table(spark, sf_dir, "documents").select("doc_id", "lang"), "doc_id")
-    )
-    return _rank_topk_grouped(agg, "lang")
+    qt = query_terms_df(queries)
+    scores = _bm25_scores(_contribs(posts, qt.join(tstats, "term"), n_docs, avgdl))
+    lang = load_table(spark, sf_dir, "documents").select("doc_id", "lang")
+    return _rank_topk_grouped(scores.join(lang, "doc_id"), "lang")
 
 
 def fts_collapse_index(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1734,25 +1565,18 @@ def _rm3_expansion(spark: SparkSession, sf_dir: str, fb: DataFrame) -> DataFrame
     plus the global df table."""
     docs = _docs(spark, sf_dir)
     n_docs = docs.count()
-    posts = (
-        docs.select("doc_id", F.explode("terms").alias("term"))
-        .groupBy("term", "doc_id")
-        .agg(F.count("*").alias("tf"))
-    )
+    posts = _postings(docs)
     tstats = posts.groupBy("term").agg(F.count("*").alias("df"))
     queries = spark.createDataFrame(DOC_QUERIES, "qid long, question string")
     qt = queries.select(
         "qid", F.explode(tokens_col("question")).alias("term")
     ).distinct()
-    idf = F.log(
-        F.lit(1.0) + (F.lit(float(n_docs)) - F.col("df") + 0.5) / (F.col("df") + 0.5)
-    )
     exp = (
         posts.join(fb.select("qid", "doc_id"), "doc_id")
         .groupBy("qid", "term")
         .agg(F.sum("tf").alias("stf"))
         .join(tstats, "term")
-        .withColumn("w", F.col("stf").cast("double") * idf)
+        .withColumn("w", F.col("stf").cast("double") * idf_col(n_docs))
         .join(qt, ["qid", "term"], "left_anti")
     )
     w = Window.partitionBy("qid").orderBy(
@@ -1776,38 +1600,12 @@ def fts_rm3(spark: SparkSession, sf_dir: str) -> DataFrame:
     exp = _rm3_expansion(spark, sf_dir, fb).withColumn(
         "qtf", F.lit(1).cast("long")
     )
-    docs = _docs(spark, sf_dir).cache()
-    row = docs.agg(F.count("*").alias("n"), F.avg("doclen").alias("avgdl")).collect()[0]
-    n_docs, avgdl = row["n"], row["avgdl"]
-    posts = (
-        docs.select("doc_id", "doclen", F.explode("terms").alias("term"))
-        .groupBy("term", "doc_id", "doclen")
-        .agg(F.count("*").alias("tf"))
-    )
-    tstats = posts.groupBy("term").agg(F.count("*").alias("df"))
+    posts, tstats, n_docs, avgdl = _corpus_model(_docs(spark, sf_dir))
     queries = spark.createDataFrame(DOC_QUERIES, "qid long, question string")
-    qt = (
-        queries.select("qid", F.explode(tokens_col("question")).alias("term"))
-        .groupBy("qid", "term")
-        .agg(F.count("*").alias("qtf"))
-        .unionByName(exp)
+    qt = query_terms_df(queries).unionByName(exp)
+    return _rank_topk(
+        _bm25_scores(_contribs(posts, qt.join(tstats, "term"), n_docs, avgdl))
     )
-    joined = posts.join(F.broadcast(qt.join(tstats, "term")), "term")
-    idf = F.log(
-        F.lit(1.0) + (F.lit(float(n_docs)) - F.col("df") + 0.5) / (F.col("df") + 0.5)
-    )
-    k1, b = K1_DEFAULT, B_DEFAULT
-    tf = F.col("tf").cast("double")
-    contrib = (
-        F.col("qtf") * idf * tf * (k1 + 1.0)
-        / (tf + k1 * (1.0 - b + b * F.col("doclen") / F.lit(float(avgdl))))
-    )
-    agg = (
-        joined.withColumn("contrib", contrib)
-        .groupBy("qid", "doc_id")
-        .agg(F.sum("contrib").alias("score"))
-    )
-    return _rank_topk(agg)
 
 
 def fts_rm3_index(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1853,34 +1651,11 @@ def fts_explain(spark: SparkSession, sf_dir: str) -> DataFrame:
     the raw statistics (tf, doclen) and that term's BM25 contribution —
     Σ contrib per doc = the doc's search score. Exact-semantics oracle for
     `fts_explain_index`."""
-    docs = _docs(spark, sf_dir).cache()
-    row = docs.agg(F.count("*").alias("n"), F.avg("doclen").alias("avgdl")).collect()[0]
-    n_docs, avgdl = row["n"], row["avgdl"]
-    posts = (
-        docs.select("doc_id", "doclen", F.explode("terms").alias("term"))
-        .groupBy("term", "doc_id", "doclen")
-        .agg(F.count("*").alias("tf"))
-    )
-    tstats = posts.groupBy("term").agg(F.count("*").alias("df"))
+    posts, tstats, n_docs, avgdl = _corpus_model(_docs(spark, sf_dir))
     queries = spark.createDataFrame(DOC_QUERIES, "qid long, question string")
-    qt = (
-        queries.select("qid", F.explode(tokens_col("question")).alias("term"))
-        .groupBy("qid", "term")
-        .agg(F.count("*").alias("qtf"))
-    )
-    joined = posts.join(F.broadcast(qt.join(tstats, "term")), "term")
-    idf = F.log(
-        F.lit(1.0) + (F.lit(float(n_docs)) - F.col("df") + 0.5) / (F.col("df") + 0.5)
-    )
-    k1, b = K1_DEFAULT, B_DEFAULT
-    tf = F.col("tf").cast("double")
-    contrib = (
-        F.col("qtf") * idf * tf * (k1 + 1.0)
-        / (tf + k1 * (1.0 - b + b * F.col("doclen") / F.lit(float(avgdl))))
-    ).alias("contrib")
-    detailed = joined.select("qid", "doc_id", "term", "tf", "doclen", contrib)
-    agg = detailed.groupBy("qid", "doc_id").agg(F.sum("contrib").alias("score"))
-    top = _rank_topk(agg, EXPLAIN_K).select("qid", "doc_id")
+    qt = query_terms_df(queries)
+    detailed = _contribs(posts, qt.join(tstats, "term"), n_docs, avgdl)
+    top = _rank_topk(_bm25_scores(detailed), EXPLAIN_K).select("qid", "doc_id")
     return (
         detailed.join(top, ["qid", "doc_id"], "leftsemi")
         .select(
@@ -1946,12 +1721,7 @@ def fts_suggest(spark: SparkSession, sf_dir: str) -> DataFrame:
     corrections). Exact-match tokens still suggest themselves first (df
     order); OOV-beyond-distance tokens yield no rows. Exact-semantics
     oracle for `fts_suggest_index`."""
-    docs = _docs(spark, sf_dir)
-    posts = (
-        docs.select("doc_id", F.explode("terms").alias("term"))
-        .groupBy("term", "doc_id")
-        .agg(F.count("*").alias("tf"))
-    )
+    posts = _postings(_docs(spark, sf_dir))
     tstats = posts.groupBy("term").agg(F.count("*").alias("df"))
     qf = spark.createDataFrame(FUZZY_PARSED, "qid long, pat string, qtf long")
     cand = tstats.join(
@@ -3703,9 +3473,7 @@ def fts_bm25f(spark: SparkSession, sf_dir: str) -> DataFrame:
     wtf = parts[0].unionByName(parts[1])
     pseudo = wtf.groupBy("term", "doc_id").agg(F.sum("wtf").alias("tfp"))
     joined = pseudo.join(F.broadcast(qt.join(df_t, "term")), "term")
-    idf = F.log(
-        F.lit(1.0) + (F.lit(float(n_docs)) - F.col("df") + 0.5) / (F.col("df") + 0.5)
-    )
+    idf = idf_col(n_docs)
     k1 = K1_DEFAULT
     contrib = (
         F.col("qtf") * idf * F.col("tfp") * (k1 + 1.0) / (F.col("tfp") + k1)
@@ -3946,9 +3714,7 @@ def fts_bm25f_index(spark: SparkSession, sf_dir: str) -> DataFrame:
             qt_rows.append((qid, t, n))
     qt = spark.createDataFrame(qt_rows, "qid long, term string, qtf long")
 
-    idf = F.log(
-        F.lit(1.0) + (F.lit(float(n_docs)) - F.col("df") + 0.5) / (F.col("df") + 0.5)
-    )
+    idf = idf_col(n_docs)
     k1 = K1_DEFAULT
     contrib = F.col("qtf") * idf * F.col("tfp") * (k1 + 1.0) / (F.col("tfp") + k1)
     back = spark.read.parquet(_index_docs_path(idx)).select(

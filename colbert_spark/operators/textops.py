@@ -9,6 +9,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from colbert_spark.functions.tokenizer import duckdb_tokens_sql, tokens_col
+from colbert_spark.query.bm25 import idf_col
 from colbert_spark.sources.tables import load_table
 
 STOPWORDS = ("the", "a", "of", "and", "to", "in")
@@ -378,13 +379,8 @@ def fts_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
     tf = toks.groupBy("doc_id", "term").agg(F.count(F.lit(1)).alias("tf"))
     df_tbl = tf.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
     n_docs = docs.count()
-    idf = F.log(
-        F.lit(1.0)
-        + (F.lit(float(n_docs)) - F.col("df") + F.lit(0.5))
-        / (F.col("df") + F.lit(0.5))
-    )
     scored = tf.join(df_tbl, "term").withColumn(
-        "score", F.col("tf").cast("double") * idf
+        "score", F.col("tf").cast("double") * idf_col(n_docs)
     )
     from pyspark.sql import Window
 

@@ -33,21 +33,31 @@ def query_terms_df(queries: DataFrame) -> DataFrame:
     )
 
 
-def bm25_score_col(k1: float, b: float, n_docs, avgdl):
-    """BM25 contribution column: idf(df) · tf·(k1+1)/(tf + k1·(1−b+b·dl/avgdl)).
-
-    idf = ln(1 + (N − df + 0.5)/(df + 0.5))  (Lucene-style positive floor).
-    All JVM-side arithmetic; float64 throughout.
-    """
-    idf = F.log(
+def idf_col(n_docs):
+    """idf = ln(1 + (N − df + 0.5)/(df + 0.5)) over the `df` column
+    (Lucene-style positive floor). `F.lit` of an int N is exact below 2^53."""
+    return F.log(
         F.lit(1.0)
         + (F.lit(n_docs) - F.col("df") + F.lit(0.5)) / (F.col("df") + F.lit(0.5))
     )
-    tf = F.col("tf").cast("double")
+
+
+def bm25_col(weight, tf, k1: float, b: float, avgdl):
+    """BM25 saturation over the `doclen` column:
+    weight·tf·(k1+1)/(tf + k1·(1−b+b·dl/avgdl)). `weight` is qtf·idf for a
+    term and Σ idf for a phrase (tf = its occurrence count). The product is
+    taken weight-first, left to right, so every caller rounds identically.
+    All JVM-side arithmetic; float64 throughout."""
+    tf = tf.cast("double")
     norm = tf + F.lit(k1) * (
         F.lit(1.0) - F.lit(b) + F.lit(b) * F.col("doclen") / F.lit(avgdl)
     )
-    return F.col("qtf") * idf * tf * F.lit(k1 + 1.0) / norm
+    return weight * tf * F.lit(k1 + 1.0) / norm
+
+
+def bm25_score_col(k1: float, b: float, n_docs, avgdl):
+    """Per-posting BM25 contribution: qtf · idf(df) · saturation(tf, doclen)."""
+    return bm25_col(F.col("qtf") * idf_col(n_docs), F.col("tf"), k1, b, avgdl)
 
 
 def bm25_topk_dataframe(

@@ -31,13 +31,13 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from colbert_spark.index.codec import decode_block
+from colbert_spark.query.bm25 import query_terms_df
 from colbert_spark.query.wand import (
     _EMPTY,
     KERNEL_OUT_SCHEMA,
     TOPK_SCHEMA,
     IndexSearcher,
     bucket_frame_stream,
-    query_terms_df,
 )
 
 MU_DEFAULT = 2000.0

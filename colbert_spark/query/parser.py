@@ -119,8 +119,8 @@ class ParsedQuery:
 
 def parse_query(q: str) -> ParsedQuery:
     """Parse one query string. Raises ValueError on syntax this subset does
-    not define (a prohibited phrase, a fielded range) — a query service
-    should surface that to the caller, not guess."""
+    not define (a prohibited phrase, a fielded phrase, a fielded range) — a
+    query service should surface that to the caller, not guess."""
     clauses: list[Clause] = []
     pending_occur: str | None = None  # from a leading +/-/NOT/AND
     for m in _LEX.finditer(q or ""):
@@ -208,6 +208,11 @@ def parse_query(q: str) -> ParsedQuery:
                 raise ValueError(
                     "fielded range (field:[lo TO hi]) is not in the "
                     "supported subset"
+                )
+            if '"' in w:
+                raise ValueError(
+                    'fielded phrase (field:"...") is not in the supported '
+                    "subset; rewrite as fielded term clauses"
                 )
         if not w:
             continue

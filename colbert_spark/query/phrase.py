@@ -45,6 +45,7 @@ from pyspark.sql import functions as F
 
 from colbert_spark.functions.tokenizer import py_tokenize, tokens_col
 from colbert_spark.index.codec import decode_block
+from colbert_spark.query.bm25 import bm25_col
 from colbert_spark.query.wand import bucket_frame_stream, load_index
 
 PHRASE_OUT_SCHEMA = "phrase_id long, doc_id long, n_occ long"
@@ -656,13 +657,7 @@ class PositionalSearcher:
             if self._avgdl_global is not None
             else float(st["avgdl"])
         )
-        tf = F.col("n_occ").cast("double")
-        score = (
-            F.col("idf_sum")
-            * tf
-            * (k1 + 1.0)
-            / (tf + k1 * (1.0 - b + b * F.col("doclen") / F.lit(avgdl)))
-        )
+        score = bm25_col(F.col("idf_sum"), F.col("n_occ"), k1, b, avgdl)
         scored = (
             hits.join(F.broadcast(idf_df), "phrase_id")
             .join(doclens, "doc_id")

@@ -81,7 +81,6 @@ from pyspark.sql import functions as F
 
 from colbert_spark.functions.tokenizer import py_tokenize
 from colbert_spark.index.codec import decode_block
-from colbert_spark.query.bm25 import query_terms_df  # noqa: F401 (re-export)
 
 KERNEL_OUT_SCHEMA = "qid long, doc_id long, score double"
 TOPK_SCHEMA = "qid long, rank int, doc_id long, score double"

@@ -116,6 +116,13 @@ def test_fielded_range_rejected():
         parse_query("title:[a TO b]")
 
 
+def test_fielded_phrase_rejected():
+    # the lexer would otherwise split it into the term clauses `"hash`, `join"`
+    for q in ('title:"hash join"', 'title:"hash"', '+title:"hash join"~2'):
+        with pytest.raises(ValueError):
+            parse_query(q)
+
+
 def test_empty_and_whitespace():
     assert parse_query("").clauses == []
     assert parse_query("   ").clauses == []

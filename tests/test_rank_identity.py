@@ -96,6 +96,40 @@ def test_dataframe_path_rank_identity(spark, corpus_df, tiny_queries, oracle, go
     _assert_rank_identical(topk.collect(), golden)
 
 
+def test_bm25_columns_match_oracle(spark):
+    """The one Spark-column BM25 (`query/bm25.py`) equals the scalar oracle
+    over a (qtf, df, tf, doclen) grid, in both forms: the per-term
+    `bm25_score_col` and the phrase form `bm25_col(idf_sum, n_occ)`."""
+    import itertools
+
+    from colbert_spark.oracle import B_DEFAULT, K1_DEFAULT, bm25_idf, bm25_term_score
+    from colbert_spark.query.bm25 import bm25_col, bm25_score_col
+
+    n_docs, avgdl = 1000, 37.25
+    grid = [
+        (qtf, df, tf, dl, bm25_idf(n_docs, df) + bm25_idf(n_docs, 7))
+        for qtf, df, tf, dl in itertools.product(
+            (1, 3), (1, 17, 500, 1000), (1, 2, 9), (1, 37, 300)
+        )
+    ]
+    frame = spark.createDataFrame(
+        grid, "qtf long, df long, tf long, doclen int, idf_sum double"
+    )
+    rows = frame.select(
+        "qtf", "df", "tf", "doclen", "idf_sum",
+        bm25_score_col(K1_DEFAULT, B_DEFAULT, n_docs, avgdl).alias("term"),
+        bm25_col(F.col("idf_sum"), F.col("tf"), K1_DEFAULT, B_DEFAULT, avgdl)
+        .alias("phrase"),
+    ).collect()
+    assert len(rows) == len(grid)
+    for r in rows:
+        idf = bm25_idf(n_docs, r["df"])
+        want = r["qtf"] * bm25_term_score(r["tf"], r["doclen"], avgdl, idf)
+        assert math.isclose(r["term"], want, rel_tol=1e-12), r
+        want = bm25_term_score(r["tf"], r["doclen"], avgdl, r["idf_sum"])
+        assert math.isclose(r["phrase"], want, rel_tol=1e-12), r
+
+
 def test_segment_path_rank_identity(spark, corpus_df, tiny_queries, golden, tmp_path_factory):
     index_dir = str(tmp_path_factory.mktemp("idx"))
     # bucket_size=127 (prime, < corpus size) forces multi-bucket merges and
