@@ -119,20 +119,26 @@ _BLOCK_COLS = [
 
 _NO_DOCS = np.empty(0, dtype=np.int64)
 _NO_SCORES = np.empty(0, dtype=np.float64)
+_POINT_COLS = pd.Index(["rank", "doc_id", "score"])
 
 
 def _point_result(docs: np.ndarray, scores: np.ndarray, k: int) -> pd.DataFrame:
     """Every `search_point` exit, empty included: exact top-k by (score DESC,
     doc_id ASC) as int64/int64/float64 rank/doc_id/score over a RangeIndex.
-    From numpy, never pandas Series (~5× the cost per query)."""
+    Built straight from the column arrays: `pd.DataFrame(dict)` spends ~2×
+    as long validating and aligning what is known here. `docs[sel]` and
+    `scores[sel]` are fresh copies, so no frame shares a cached array."""
     sel = np.lexsort((docs, -scores))[:k]
-    return pd.DataFrame(
-        {
-            "rank": np.arange(1, len(sel) + 1, dtype=np.int64),
-            "doc_id": docs[sel].astype(np.int64, copy=False),
-            "score": scores[sel].astype(np.float64, copy=False),
-        },
-        copy=False,  # docs[sel] and scores[sel] are fresh copies
+    n = len(sel)
+    return pd.DataFrame._from_arrays(
+        [
+            np.arange(1, n + 1, dtype=np.int64),
+            docs[sel].astype(np.int64, copy=False),
+            scores[sel].astype(np.float64, copy=False),
+        ],
+        columns=_POINT_COLS,
+        index=pd.RangeIndex(n),
+        verify_integrity=False,
     )
 
 
@@ -245,8 +251,8 @@ class _TermBlocks:
     is untouched; only the upper bounds widen, so pruning stays exact."""
 
     __slots__ = (
-        "idf", "unit_max", "firsts", "lasts", "maxs", "rows", "_dec", "_full",
-        "prefixed", "budget", "_fsorted", "_seed",
+        "idf", "unit_max", "firsts", "lasts", "lo", "hi", "maxs", "rows",
+        "_dec", "_full", "prefixed", "budget", "_fsorted", "_seed",
     )
 
     def __init__(
@@ -263,6 +269,9 @@ class _TermBlocks:
         self.maxs = sub["max_unit"].to_numpy(np.float64) * (self.idf * max_scale)
         self.firsts = sub["first_doc"].to_numpy(np.int64)
         self.lasts = sub["last_doc"].to_numpy(np.int64)
+        # the term's doc span in this bucket: every dense scatter's bounds
+        self.lo = int(self.firsts.min())
+        self.hi = int(self.lasts.max())
         self.unit_max = float(self.maxs.max())
         self.rows = (
             sub["doc_bytes"].to_numpy(),
@@ -413,6 +422,62 @@ def _score_query_in_bucket(
     return cands[sel], scores[sel]
 
 
+def _score_point_bucket(
+    terms: list[tuple[_TermBlocks, float]],
+    k: int,
+    k1: float,
+    b: float,
+    avgdl: float,
+    neg: list[_TermBlocks] | None = None,
+    req: list[list[_TermBlocks]] | None = None,
+    excluded: np.ndarray | None = None,
+) -> tuple[np.ndarray, np.ndarray]:
+    """The point path's dense pass: ONE query in one bucket over the cached
+    whole-term (docs, units) arrays. `terms` are the query's terms present
+    in the bucket, ascending term_id. Returns the bucket's top-k KEEPING
+    ties at the kth score (one `np.partition`); the caller's (−score,
+    doc_id) cut resolves them. The docs array may be a term's cached one:
+    callers index or concatenate it, never hand it out.
+
+    One term and no mask: the scores are `qtf · units` (units are never 0,
+    and 0.0 + x == x, so this is the accumulator's value bit for bit).
+    Otherwise the terms scatter-add over the bucket's doc span in ascending
+    term_id order — the oracle's float64 order — and the masks zero slots
+    exactly as `_score_batch_dense` does: `neg` (exclude) docs, docs
+    outside any `req` group (a group with no blocks here empties the
+    bucket), and `excluded` (small tombstone set, sorted global ids)."""
+    if len(terms) == 1 and not neg and not req and excluded is None:
+        tb, qtf = terms[0]
+        docs, units = tb.full(k1, b, avgdl)
+        scores = qtf * units
+    else:
+        tbs = [tb for tb, _ in terms] + (neg or [])
+        tbs += [t for g in req or () for t in g]
+        lo = min(tb.lo for tb in tbs)
+        hi = max(tb.hi for tb in tbs)
+        acc = np.zeros(hi - lo + 1, dtype=np.float64)
+        for tb, qtf in terms:
+            tdocs, units = tb.full(k1, b, avgdl)
+            acc[tdocs - lo] += qtf * units
+        for g in req or ():
+            live = np.zeros(hi - lo + 1, dtype=bool)
+            for tb in g:
+                live[tb.full(k1, b, avgdl)[0] - lo] = True
+            acc[~live] = 0.0
+        for tb in neg or ():
+            acc[tb.full(k1, b, avgdl)[0] - lo] = 0.0
+        if excluded is not None:
+            acc[excluded[(excluded >= lo) & (excluded <= hi)] - lo] = 0.0
+        docs = np.flatnonzero(acc)
+        scores = acc[docs]
+        docs += lo
+    if len(scores) > k:
+        kth = np.partition(scores, len(scores) - k)[len(scores) - k]
+        keep = scores >= kth
+        docs, scores = docs[keep], scores[keep]
+    return docs, scores
+
+
 def _prune_score_bucket(
     terms: list[tuple[_TermBlocks, float]],
     k: int,
@@ -447,10 +512,13 @@ def _prune_score_bucket(
     Every bound is slackened by a 1e-9 relative margin before a skip
     (conservative only — extra survivors re-score exactly), so float
     rounding in the bound arithmetic can never drop a true top-k doc.
-    Returns (docs, scores, used_dense): the bucket's top-k keeping ties at
-    the kth score, plus whether this bucket degraded to the dense scatter —
-    the caller passes that back as `dense_hint` so a query whose first
-    (highest-bound) bucket proved unselective skips selection in the rest."""
+    Where selection cannot pay (the PRE- and POST-checks below), the
+    bucket degrades to the point dense pass (`_score_point_bucket`) and
+    then the same θ filter. Returns (docs, scores, used_dense): the
+    bucket's top-k keeping ties at the kth score, plus whether it went
+    dense — the caller passes that back as `dense_hint` so a query whose
+    first (highest-bound) bucket proved unselective skips selection in the
+    rest."""
     empty = (np.empty(0, np.int64), np.empty(0, np.float64), dense_hint)
     ubs = np.array([tb.unit_max * qtf for tb, qtf in terms])
     total_ub = float(ubs.sum())
@@ -499,48 +567,18 @@ def _prune_score_bucket(
     p_m = float(prefix[m])
     essential = order[m:]
 
-    lo = min(int(tb.firsts.min()) for tb, _ in terms)
-    hi = max(int(tb.lasts.max()) for tb, _ in terms)
-    span = hi - lo + 1
+    lo = min(tb.lo for tb, _ in terms)
+    span = max(tb.hi for tb, _ in terms) - lo + 1
     total_postings = sum(len(a[0]) for a in arrs)
 
-    empty2 = (np.empty(0, np.int64), np.empty(0, np.float64))
-
-    def dense_exact() -> tuple[np.ndarray, np.ndarray]:
-        """Exact scatter of EVERY term over the same cached arrays — one
-        pass per term in ascending term_id order, so per-doc float
-        accumulation stays the oracle's (a doc has one posting per term;
-        dense-slot adds happen in term iteration order). The pruned path's
-        cost floor: ≈ the dense pass's per-query work, never more."""
-        acc = np.zeros(span, dtype=np.float64)
-        for (tb, qtf), (docs, units) in zip(terms, arrs):
-            acc[docs - lo] += qtf * units
-            stats["postings_scanned"] += len(docs)
-        nz = np.flatnonzero(acc)
-        if not nz.size:
-            return empty2
-        sub = acc[nz]
-        keepd = sub >= theta - slack
-        nz, sub = nz[keepd], sub[keepd]
-        if not nz.size:
-            return empty2
-        if len(nz) > k:
-            kth = np.partition(sub, len(sub) - k)[len(sub) - k]
-            km = sub >= kth
-            nz, sub = nz[km], sub[km]
-        return nz + lo, sub.copy()
-
+    # PRE-checks: the query's first (highest-bound) bucket already proved
+    # unselective (`dense_hint` — bucket bounds are near-uniform for one
+    # query, so later buckets will too), or the essential lists alone carry
+    # most of the bucket's postings. Either way selection cannot pay for
+    # itself: go dense directly.
     ess_postings = sum(len(arrs[ti][0]) for ti in essential)
-    if dense_hint or 2 * ess_postings > total_postings:
-        # PRE-checks: the query's first (highest-bound) bucket already
-        # proved unselective (`dense_hint` — bucket bounds are near-uniform
-        # for one query, so later buckets will too), or the essential lists
-        # alone carry most of the bucket's postings. Either way selection
-        # cannot pay for itself: go dense directly.
-        d, s = dense_exact()
-        return d, s, True
-
-    if 4 * ess_postings < span:
+    dense = dense_hint or 2 * ess_postings > total_postings
+    if not dense and 4 * ess_postings < span:
         # SPARSE selection: the essential lists are tiny next to the bucket
         # span, so O(span) dense arrays (zeros + flatnonzero sweeps) would
         # dominate the query — build the candidate union directly and
@@ -555,50 +593,40 @@ def _prune_score_bucket(
             docs, units = arrs[ti]
             acc_e[np.searchsorted(cand0, docs)] += terms[ti][1] * units
             stats["postings_scanned"] += len(docs)
-        stats["postings_skipped"] += total_postings - ess_postings
-        sel = acc_e + p_m >= theta - slack
-        cands = cand0[sel]
-        if not cands.size:
-            return empty
-        if cands.size * len(terms) > total_postings:
-            stats["postings_skipped"] -= total_postings - ess_postings
-            d, s = dense_exact()
-            return d, s, True
-        scores = exact_scores(cands)
-    else:
+        cands = cand0[acc_e + p_m >= theta - slack]
+    elif not dense:
         acc = np.zeros(span, dtype=np.float64)
         for ti in essential:
             docs, units = arrs[ti]
             acc[docs - lo] += terms[ti][1] * units
             stats["postings_scanned"] += len(docs)
-        stats["postings_skipped"] += total_postings - ess_postings
         # acc > 0 excludes empty slots of the bucket span (and docs
         # matching only non-essential terms — score ≤ P_m < θ by the split)
-        surv = np.flatnonzero((acc > 0) & (acc + p_m >= theta - slack))
-        if not surv.size:
+        cands = np.flatnonzero((acc > 0) & (acc + p_m >= theta - slack)) + lo
+    if not dense:
+        if not cands.size:
             return empty
-        if surv.size * len(terms) > total_postings:
-            # POST-check (weak DATA selectivity despite a real split): the
-            # per-survivor probes would cost more than scanning everything
-            stats["postings_skipped"] -= total_postings - ess_postings
-            d, s = dense_exact()
-            return d, s, True
-        cands = surv + lo
+        # POST-check (weak DATA selectivity despite a real split): the
+        # per-survivor probes would cost more than scanning everything
+        dense = cands.size * len(terms) > total_postings
+    if dense:
+        # the pruned path's cost floor: the point dense pass over the same
+        # cached arrays, ≈ its per-query work, never more
+        stats["postings_scanned"] += total_postings
+        cands, scores = _score_point_bucket(terms, k, k1, b, avgdl)
+    else:
+        stats["postings_skipped"] += total_postings - ess_postings
         scores = exact_scores(cands)
     # θ is the exact score of a real kth-best doc seen so far (pool or this
     # bucket's seed), so anything strictly below it cannot reach the global
     # top-k; the slack keeps boundary ties
     keep = scores >= theta - slack
     cands, scores = cands[keep], scores[keep]
-    if not len(cands):
-        return empty
-
-    top = min(k, len(cands))
-    if len(cands) > top:
-        kth = np.partition(scores, len(scores) - top)[len(scores) - top]
+    if len(cands) > k:
+        kth = np.partition(scores, len(scores) - k)[len(scores) - k]
         km = scores >= kth  # keep ties; the global cut tie-breaks exactly
         cands, scores = cands[km], scores[km]
-    return cands, scores, dense_hint
+    return cands, scores, dense
 
 
 # Batches at least this large score through the shared dense path. Block-max
@@ -689,8 +717,8 @@ def _score_batch_dense(
     query-string path, where a phrase clause in a mixed query filters only
     its own query's candidates. Composes with `allowed` (both masks
     apply)."""
-    lo = min(int(tb.firsts.min()) for tb in groups.values())
-    hi = max(int(tb.lasts.max()) for tb in groups.values())
+    lo = min(tb.lo for tb in groups.values())
+    hi = max(tb.hi for tb in groups.values())
     acc = np.zeros(hi - lo + 1, dtype=np.float64)
     mask = None
     if allowed is not None:
@@ -2349,83 +2377,48 @@ class IndexSearcher:
         shared grammar, resolve terms through the searcher-lifetime LRU,
         pull any uncached terms' dictionary entries and block rows once
         from the snapshot's parquet files (`SnapshotReader`, driver-side),
-        then run the IDENTICAL numpy kernels the distributed path runs
-        (`_score_query_in_bucket` block-max MaxScore, or the dense pass
-        under negation/tombstones) over the cached frames and take the
-        exact global top-k with (score DESC, doc_id ASC) ties. Neither a
-        first-touch nor a cache-hot query schedules a Spark job; a hot one
-        is pure driver numpy, sub-10 ms. Only the `_point_fallback` exits
-        below run Spark.
+        then score over the cached whole-term arrays (`_score_point_locked`:
+        one dense pass per bucket, or block-max MaxScore for head terms)
+        and take the exact global top-k with (score DESC, doc_id ASC) ties.
+        Neither a first-touch nor a cache-hot query schedules a Spark job; a
+        hot one is a few numpy calls per bucket plus the result frame. Only
+        the `_point_fallback` exits below run Spark.
 
-        Returns a pandas DataFrame (rank, doc_id, score) — rank-identical
-        to `search()` on the same snapshot (asserted in tests). An index
-        with a LARGE pending-delete set (cogroup masking) falls back to the
-        distributed path: the mask is deliberately never driver-resident."""
+        Returns a pandas DataFrame (rank, doc_id, score) — rank- and
+        score-identical to `search()` on the same snapshot (asserted in
+        tests). An index with a LARGE pending-delete set (cogroup masking)
+        falls back to the distributed path: the mask is deliberately never
+        driver-resident."""
         if self._tomb_df is not None:
             return self._point_fallback(question, k, exclude, require)
         from colbert_spark.functions.analyzer import py_analyze
 
         counts = Counter(py_analyze(py_tokenize(question or ""), self._analyzer))
-        neg = (
-            set(py_analyze(py_tokenize(exclude), self._analyzer))
-            if exclude
-            else set()
-        )
-        req_tok_groups: list[list[str]] = []
-        if require:
-            for atom in require.split():
-                toks = py_analyze(
-                    py_tokenize(atom.replace(",", " ")), self._analyzer
-                )
-                if toks:
-                    req_tok_groups.append(sorted(set(toks)))
         if not counts:
             return _point_result(_NO_DOCS, _NO_SCORES, k)
-        resolved = self._lookup_terms(
-            sorted(
-                set(counts)
-                | neg
-                | {t for g in req_tok_groups for t in g}
-            )
+        neg = (
+            set(py_analyze(py_tokenize(exclude), self._analyzer))
+            if exclude else set()
         )
-        n_docs = self.stats.get("live_docs", self.stats["N"])
-        pairs = sorted(
-            (resolved[t][0], float(qtf))
-            for t, qtf in counts.items()
-            if resolved.get(t) is not None
-        )
-        if not pairs:
+        req_toks = [
+            set(py_analyze(py_tokenize(atom.replace(",", " ")), self._analyzer))
+            for atom in (require or "").split()
+        ]
+        req_toks = [g for g in req_toks if g]
+        resolved = self._lookup_terms(sorted(set(counts).union(neg, *req_toks)))
+        tid = {t: hit[0] for t, hit in resolved.items() if hit is not None}
+        pairs = sorted((tid[t], float(q)) for t, q in counts.items() if t in tid)
+        neg_tids = sorted(tid[t] for t in neg if t in tid)
+        req_groups = [sorted(tid[t] for t in g if t in tid) for g in req_toks]
+        if not pairs or not all(req_groups):
+            # all-OOV question, or a fully-OOV required group: no match
             return _point_result(_NO_DOCS, _NO_SCORES, k)
-        tids = np.array([p[0] for p in pairs], dtype=np.int64)
-        qtfs = np.array([p[1] for p in pairs], dtype=np.float64)
-        neg_tids = sorted(
-            resolved[t][0] for t in neg if resolved.get(t) is not None
-        )
-        req_groups: list[np.ndarray] = []
-        for g in req_tok_groups:
-            gtids = sorted(
-                resolved[t][0] for t in g if resolved.get(t) is not None
-            )
-            if not gtids:
-                # fully-OOV required group: nothing can match
-                return _point_result(_NO_DOCS, _NO_SCORES, k)
-            req_groups.append(np.array(gtids, dtype=np.int64))
-        idf_map = {}
-        df_by_tid: dict[int, int] = {}
-        for t, hit in resolved.items():
-            if hit is not None:
-                tid, df = hit
-                if self._df_over is not None:
-                    df = self._df_over.get(t, df)
-                df_by_tid[tid] = int(df)
-                idf_map[tid] = float(
-                    np.log(1.0 + (n_docs - df + 0.5) / (df + 0.5))
-                )
-        all_ids = sorted(
-            set(tids.tolist())
-            | set(neg_tids)
-            | {int(t) for g in req_groups for t in g}
-        )
+        over = self._df_over or {}
+        df_by_tid = {
+            hit[0]: int(over.get(t, hit[1]))
+            for t, hit in resolved.items() if hit is not None
+        }
+        all_ids = sorted({t for t, _ in pairs}.union(neg_tids, *req_groups))
         # one lock spans fetch → decode-cache build → scoring: concurrent
         # clients see consistent LRUs and a shared _DecodeBudget (driver
         # numpy is GIL-bound anyway; a first-touch block read holds the lock
@@ -2434,8 +2427,7 @@ class IndexSearcher:
             # False: a head term too big to collect — degrade below
             if self._fetch_blocks(all_ids, df_by_tid):
                 return self._score_point_locked(
-                    all_ids, tids, qtfs, neg_tids, idf_map, k,
-                    req_groups=req_groups, df_by_tid=df_by_tid,
+                    all_ids, pairs, neg_tids, req_groups, df_by_tid, k
                 )
         return self._point_fallback(question, k, exclude, require)
 
@@ -2460,23 +2452,18 @@ class IndexSearcher:
         )
 
     def _score_point_locked(
-        self, all_ids, tids, qtfs, neg_tids, idf_map, k,
-        req_groups: list | None = None,
-        df_by_tid: dict[int, int] | None = None,
+        self, all_ids, pairs, neg_tids, req_groups, df_by_tid, k
     ) -> pd.DataFrame:
         """Driver-numpy scoring over the resident block cache (lock held by
-        caller): identical kernels to the distributed dense pass, except that
-        an unmasked head-term query (summed df ≥ `point_prune_min_postings`,
-        no exclude/require/tombstones) goes through driver-side block-max
-        MaxScore (`_score_point_pruned`) — the same θ logic the distributed
-        kernel runs, applied to the cached frames' `max_unit` bounds so most
-        of a df≈10^7 term's blocks are never decoded."""
-        k1, b, avgdl = (
-            self.stats["k1"], self.stats["b"], self.stats["avgdl"],
-        )
-        enc_avgdl = self.stats.get("min_enc_avgdl") or avgdl
-        max_scale = max(1.0, avgdl / enc_avgdl) if enc_avgdl else 1.0
-        prefixed = self.stats.get("segver", 2) >= 3
+        caller). A term's `_TermBlocks` per bucket are built on its first
+        query, with idf priced from `df_by_tid` then (`with_global_stats`
+        and `update_global_df` drop them when a price moves). An unmasked
+        head-term query (summed df ≥ `point_prune_min_postings`, no
+        exclude/require/tombstones) goes through driver-side block-max
+        MaxScore (`_score_point_pruned`); every other query takes the dense
+        pass, `_score_point_bucket` once per bucket its terms touch, which
+        masks exactly as the distributed kernels do."""
+        k1, b, avgdl = self.stats["k1"], self.stats["b"], self.stats["avgdl"]
         if self._point_budget is None:
             self._point_budget = _DecodeBudget(self.decode_cache_bytes)
         # per-(term, bucket) _TermBlocks persist across queries: their
@@ -2484,18 +2471,9 @@ class IndexSearcher:
         # a repeated term costs one scatter-add per bucket, zero decodes
         buckets: set[int] = set()
         for t in all_ids:
-            tbs = self._point_tbs.get(t)
-            if tbs is None:
-                frame = self._block_cache[t][0]
-                tbs = {
-                    int(bk): _TermBlocks(
-                        s2.sort_values("first_doc"), idf_map[t],
-                        prefixed, max_scale, budget=self._point_budget,
-                    )
-                    for bk, s2 in frame.groupby("bucket", sort=False)
-                }
-                self._point_tbs[t] = tbs
-            buckets.update(tbs.keys())
+            if t not in self._point_tbs:
+                self._point_tbs[t] = self._build_term_blocks(t, df_by_tid[t])
+            buckets.update(self._point_tbs[t])
         # θ pruning is sound only without masks (the same argument as the
         # distributed kernel: a θ seeded from a doc that exclusion /
         # require / tombstones later zero could over-prune)
@@ -2503,39 +2481,47 @@ class IndexSearcher:
             not neg_tids
             and not req_groups
             and self._tomb is None
-            and df_by_tid is not None
-            and sum(int(df_by_tid.get(int(t), 0)) for t in tids)
+            and sum(df_by_tid[t] for t, _ in pairs)
             >= self.point_prune_min_postings
         ):
             self.point_prune_stats["queries_pruned"] += 1
-            return self._score_point_pruned(tids, qtfs, k)
+            return self._score_point_pruned(pairs, k)
         self.point_prune_stats["queries_dense"] += 1
-        batch = [(0, tids, qtfs)]
-        neg_map = (
-            {0: np.array(neg_tids, dtype=np.int64)} if neg_tids else None
-        )
-        req_map = {0: req_groups} if req_groups else None
-        out_d, out_s = [], []
-        # dense pass: exact for any mask, and its whole-term full() decodes
-        # are what the budgeted cache retains across queries
+        pos = [(self._point_tbs[t], qtf) for t, qtf in pairs]
+        neg = [self._point_tbs[t] for t in neg_tids]
+        req = [[self._point_tbs[t] for t in g] for g in req_groups]
+        out_d, out_s = [_NO_DOCS], [_NO_SCORES]
         for bk in sorted(buckets):
-            groups = {
-                t: self._point_tbs[t][bk]
-                for t in all_ids
-                if bk in self._point_tbs.get(t, ())
-            }
-            if not groups:
+            terms = [(tbs[bk], qtf) for tbs, qtf in pos if bk in tbs]
+            if not terms:
                 continue
-            _, d, s = _score_batch_dense(
-                groups, batch, k, k1, b, avgdl,
-                neg_map=neg_map, excluded=self._tomb, req_map=req_map,
+            d, s = _score_point_bucket(
+                terms, k, k1, b, avgdl,
+                neg=[m[bk] for m in neg if bk in m] if neg else None,
+                req=[[m[bk] for m in g if bk in m] for g in req] if req else None,
+                excluded=self._tomb,
             )
-            out_d.extend(d)
-            out_s.extend(s)
-        docs = np.concatenate([_NO_DOCS, *out_d])
-        return _point_result(docs, np.concatenate([_NO_SCORES, *out_s]), k)
+            out_d.append(d)
+            out_s.append(s)
+        return _point_result(np.concatenate(out_d), np.concatenate(out_s), k)
 
-    def _score_point_pruned(self, tids, qtfs, k) -> pd.DataFrame:
+    def _build_term_blocks(self, tid: int, df: int) -> dict[int, _TermBlocks]:
+        """bucket → `_TermBlocks` of one resident term, priced at `df`."""
+        n_docs = self.stats.get("live_docs", self.stats["N"])
+        idf = float(np.log(1.0 + (n_docs - df + 0.5) / (df + 0.5)))
+        avgdl = self.stats["avgdl"]
+        enc_avgdl = self.stats.get("min_enc_avgdl") or avgdl
+        max_scale = max(1.0, avgdl / enc_avgdl) if enc_avgdl else 1.0
+        prefixed = self.stats.get("segver", 2) >= 3
+        return {
+            int(bk): _TermBlocks(
+                s2.sort_values("first_doc"), idf, prefixed, max_scale,
+                budget=self._point_budget,
+            )
+            for bk, s2 in self._block_cache[tid][0].groupby("bucket", sort=False)
+        }
+
+    def _score_point_pruned(self, pairs, k) -> pd.DataFrame:
         """Driver-side MaxScore over the resident block cache (point lock
         held by caller): a running global top-k threshold θ carried ACROSS
         buckets (visited in descending upper-bound order), essential/non-
@@ -2556,16 +2542,14 @@ class IndexSearcher:
         per query — the p95 bottleneck); here non-essential terms cost a
         binary-search probe per survivor instead of a full scan, and the
         `postings_scanned`/`postings_skipped` counters expose the split."""
-        k1, b, avgdl = (
-            self.stats["k1"], self.stats["b"], self.stats["avgdl"],
-        )
+        k1, b, avgdl = self.stats["k1"], self.stats["b"], self.stats["avgdl"]
         stats = self.point_prune_stats
 
-        # bucket → [(tb, qtf)] ascending term_id (tids arrive sorted)
+        # bucket → [(tb, qtf)] ascending term_id (pairs arrive sorted)
         per_bucket: dict[int, list[tuple[_TermBlocks, float]]] = {}
-        for t, qtf in zip(tids, qtfs):
-            for bk, tb in self._point_tbs.get(int(t), {}).items():
-                per_bucket.setdefault(int(bk), []).append((tb, float(qtf)))
+        for t, qtf in pairs:
+            for bk, tb in self._point_tbs.get(t, {}).items():
+                per_bucket.setdefault(bk, []).append((tb, qtf))
                 stats["blocks_seen"] += len(tb.maxs)
         # visit buckets in descending total upper bound: θ rises fastest,
         # and once a bucket's bound falls below θ every later one does too
@@ -2984,6 +2968,9 @@ class ShardedSearcher:
         self.avgdl_global = cf_g / self.n_global if self.n_global else 0.0
         for s in self.searchers:
             s.with_global_stats(self.n_global, self.avgdl_global, {})
+        # the shards' url LRUs split one federation-wide cap (the shard
+        # default), so warm()'s url-map reads stay bounded as shards grow
+        self.url_cache_max = self.searchers[0].url_cache_max
         self._df_g: dict[str, int] = {}
         self._lock = threading.Lock()
         self._pool = ThreadPoolExecutor(
@@ -2991,6 +2978,16 @@ class ShardedSearcher:
         )
         if warm:
             self.warm()
+
+    @property
+    def url_cache_max(self) -> int:
+        """Resident doc_id → url entries across all shards."""
+        return sum(s.url_cache_max for s in self.searchers)
+
+    @url_cache_max.setter
+    def url_cache_max(self, total: int) -> None:
+        for s in self.searchers:
+            s.url_cache_max = total // len(self.searchers)
 
     def warm(self, prefetch_point: bool = True) -> "ShardedSearcher":
         """Warm every shard (resident segment cache + dictionary) and, by
@@ -3002,11 +2999,12 @@ class ShardedSearcher:
         list(self._pool.map(lambda s: s.warm(), self.searchers))
         if prefetch_point:
             # resident url map per shard: when the whole shard's url map
-            # fits the driver LRU (row count from the parquet footers),
-            # read it ONCE at warm so result resolution (`_lookup_urls`)
-            # never reads per query; above the cap, misses stay one pushed
-            # driver-side read each. The read runs outside the point lock:
-            # a re-warm of a serving federation never stalls its queries.
+            # fits its share of `url_cache_max` (row count from the parquet
+            # footers), read it ONCE at warm so result resolution
+            # (`_lookup_urls`) never reads per query; above the cap, misses
+            # stay one pushed driver-side read each. The read runs outside
+            # the point lock: a re-warm of a serving federation never stalls
+            # its queries.
             def _warm_docs(s: "IndexSearcher") -> None:
                 if s._reader.n_docs() <= s.url_cache_max:
                     urls = s._reader.urls()

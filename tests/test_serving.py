@@ -759,3 +759,211 @@ def test_first_touch_point_reads_need_no_spark(spark, snapshots, snap, tiny_quer
             assert math.isclose(gs, r["score"], rel_tol=1e-9), (snap, q)
     # the reads happened, through the reader (miss counters moved)
     assert s._dict_lookup_jobs >= 1 and s._block_fetch_jobs >= 1
+
+
+def _point_term_ids(s: IndexSearcher, question, exclude, require):
+    """(positives [(tid, qtf)], negated tids, require groups) of a question
+    `s` has already served (its terms sit in the term LRU)."""
+    from collections import Counter
+
+    from colbert_spark.functions.tokenizer import py_tokenize
+
+    def tids(text):
+        return sorted(
+            s._term_cache[t][0] for t in set(py_tokenize(text))
+            if s._term_cache.get(t)
+        )
+
+    counts = Counter(py_tokenize(question))
+    pos = sorted(
+        (s._term_cache[t][0], float(c)) for t, c in counts.items()
+        if s._term_cache.get(t)
+    )
+    req = [
+        np.array(tids(a.replace(",", " ")), dtype=np.int64)
+        for a in (require or "").split()
+    ]
+    return pos, tids(exclude or ""), req
+
+
+def _check_point_pass(s: IndexSearcher, question, exclude, require):
+    """The point dense pass equals `_score_batch_dense` plus the
+    (−score, doc_id) cut bucket by bucket, bit for bit, and the whole
+    answer equals `search_point`'s. Returns that answer and counts of the
+    branches the buckets took."""
+    from colbert_spark.query.wand import (
+        _point_result, _score_batch_dense, _score_point_bucket,
+    )
+
+    got = s.search_point(question, k=K, exclude=exclude, require=require)
+    k1, b, avgdl = (s.stats[x] for x in ("k1", "b", "avgdl"))
+    pos, neg, req = _point_term_ids(s, question, exclude, require)
+    tids = np.array([t for t, _ in pos], dtype=np.int64)
+    qtfs = np.array([q for _, q in pos], dtype=np.float64)
+    all_ids = sorted(
+        set(tids.tolist()) | set(neg) | {int(t) for g in req for t in g}
+    )
+    seen = {"single": 0, "absent": 0, "dead_require": 0}
+    old_d, old_s = [np.empty(0, np.int64)], [np.empty(0, np.float64)]
+    for bk in sorted({bk for t in all_ids for bk in s._point_tbs[t]}):
+        groups = {t: s._point_tbs[t][bk] for t in all_ids if bk in s._point_tbs[t]}
+        terms = [(groups[t], q) for t, q in pos if t in groups]
+        if not terms:
+            continue
+        seen["single"] += len(terms) == 1
+        seen["absent"] += len(terms) < len(pos)
+        seen["dead_require"] += any(
+            not any(int(t) in groups for t in g) for g in req
+        )
+        _, d, sc = _score_batch_dense(
+            groups, [(0, tids, qtfs)], K, k1, b, avgdl,
+            neg_map={0: np.array(neg, dtype=np.int64)} if neg else None,
+            excluded=s._tomb, req_map={0: req} if req else None,
+        )
+        nd, ns = _score_point_bucket(
+            terms, K, k1, b, avgdl,
+            neg=[groups[t] for t in neg if t in groups] if neg else None,
+            req=(
+                [[groups[int(t)] for t in g if int(t) in groups] for g in req]
+                if req else None
+            ),
+            excluded=s._tomb,
+        )
+        sel = np.lexsort((nd, -ns))[:K]
+        want_d = np.concatenate([np.empty(0, np.int64), *d])
+        want_s = np.concatenate([np.empty(0, np.float64), *sc])
+        assert nd[sel].tolist() == want_d.tolist(), (question, bk)
+        assert (ns[sel] == want_s).all(), (question, bk)
+        old_d.append(want_d)
+        old_s.append(want_s)
+    pd.testing.assert_frame_equal(
+        got, _point_result(np.concatenate(old_d), np.concatenate(old_s), K),
+        check_exact=True,
+    )
+    return got, seen
+
+
+@pytest.mark.parametrize("snap", ["appended", "tombstoned"])
+def test_point_dense_pass_matches_batch_kernel(spark, snapshots, snap, monkeypatch):
+    """`_score_point_bucket` against the batch kernel on a build plus one
+    append (≥ 3 buckets), live and with a small tombstone set: one term,
+    several terms, a repeated term, a term absent from a bucket, exclude,
+    require (a group absent from a bucket included), and
+    `_prune_score_bucket` falling to its dense path. Every answer also
+    equals `search()` on the same snapshot, doc_id and score exactly."""
+    from colbert_spark.query import wand
+
+    d, _ = snapshots[snap]
+    s = IndexSearcher(spark, d)
+    assert (s._tomb is not None) == (snap == "tombstoned")
+    # a mid-frequency term with blocks in some buckets but not all
+    pool = [f"term{i:05d}" for i in range(300, 400)]
+    s.search_point(" ".join(["term00001", *pool]), k=K)
+    n_buckets = len(s._point_tbs[s._term_cache["term00001"][0]])
+    assert n_buckets >= 3
+    rare = next(
+        t for t in pool
+        if s._term_cache.get(t)
+        and 1 < len(s._point_tbs[s._term_cache[t][0]]) < n_buckets
+    )
+    cases = [
+        ("term00001", None, None),
+        ("term00001 term00002 term00005", None, None),
+        ("term00002 term00002 term00007", None, None),
+        (f"term00001 {rare}", None, None),
+        ("term00001 term00002", "term00003", None),
+        ("term00004", "term00002", None),
+        ("term00001 term00002", None, f"term00004 {rare}"),
+        ("term00002", None, f"{rare},term00009"),
+    ]
+    answers, seen = zip(*(_check_point_pass(s, *c) for c in cases))
+    answers = list(answers)
+    assert seen[0]["single"] and seen[3]["absent"] and seen[6]["dead_require"]
+    assert dict(_point_term_ids(s, *cases[2])[0])[
+        s._term_cache["term00002"][0]
+    ] == 2.0
+
+    if s._tomb is None:  # θ pruning runs only without masks
+        k1, b, avgdl = (s.stats[x] for x in ("k1", "b", "avgdl"))
+        pos, _, _ = _point_term_ids(s, "term00001 term00002 term00003", None, None)
+        for bk in s._point_tbs[pos[0][0]]:
+            terms = [
+                (s._point_tbs[t][bk], q) for t, q in pos
+                if bk in s._point_tbs[t]
+            ]
+            st = dict.fromkeys(s.point_prune_stats, 0)
+            pd_, ps, used = wand._prune_score_bucket(
+                terms, K, 0.0, k1, b, avgdl, st, dense_hint=True
+            )
+            nd, ns = wand._score_point_bucket(terms, K, k1, b, avgdl)
+            assert used and pd_.tolist() == nd.tolist()
+            assert (ps == ns).all()
+        # through search_point: one term is all essential, so the
+        # pre-check sends it to the dense pass
+        calls = []
+        real = wand._score_point_bucket
+        monkeypatch.setattr(
+            wand, "_score_point_bucket",
+            lambda *a, **kw: calls.append(1) or real(*a, **kw),
+        )
+        s.point_prune_min_postings = 0
+        pruned0 = s.point_prune_stats["queries_pruned"]
+        cases.append(("term00006", None, None))
+        answers.append(s.search_point(cases[-1][0], k=K))
+        assert s.point_prune_stats["queries_pruned"] == pruned0 + 1
+        assert calls, "the pruned query never took the dense exit"
+
+    qdf = spark.createDataFrame(
+        [(i, q, ex, rq) for i, (q, ex, rq) in enumerate(cases)],
+        "qid long, question string, exclude string, require string",
+    )
+    want: dict[int, list] = {}
+    for r in sorted(s.search(qdf, k=K).collect(), key=lambda r: r["rank"]):
+        want.setdefault(r["qid"], []).append(r)
+    for i, ((q, _, _), got) in enumerate(zip(cases, answers)):
+        exp = want.get(i, [])
+        assert list(got["doc_id"]) == [r["doc_id"] for r in exp], (snap, q)
+        assert list(got["score"]) == [r["score"] for r in exp], (snap, q)
+    s.close()
+
+
+def test_point_result_frame_matches_public_constructor():
+    """`_point_result` builds the frame the public constructor builds, for
+    n = 0, 1, k and > k with ties at the kth score."""
+    from colbert_spark.query.wand import _point_result
+
+    rng = np.random.default_rng(7)
+    for n in (0, 1, K, 3 * K):
+        docs = rng.permutation(1000)[:n].astype(np.int64)
+        scores = rng.integers(0, 4, n).astype(np.float64)  # many ties
+        order = sorted(range(n), key=lambda i: (-scores[i], docs[i]))[:K]
+        want = pd.DataFrame(
+            {
+                "rank": np.arange(1, len(order) + 1, dtype=np.int64),
+                "doc_id": docs[order].astype(np.int64),
+                "score": scores[order],
+            }
+        )
+        got = _point_result(docs, scores, K)
+        pd.testing.assert_frame_equal(got, want, check_index_type=True)
+        if n > K:  # a tie at the kth score falls outside the cut
+            cut = set(order)
+            rest = [i for i in range(n) if i not in cut]
+            assert scores[order[-1]] in scores[rest]
+
+
+def test_point_answer_never_aliases_cached_arrays(spark, sidx):
+    """Mutating a single-term answer in place leaves the next answer to
+    the same question untouched: no frame shares a cached term array."""
+    d, _, _ = sidx
+    s = IndexSearcher(spark, d)
+    try:
+        for k in (K, 10_000):  # 10_000: the bucket arrays pass uncut
+            first = s.search_point("term00003", k=k)
+            want = first.copy()
+            first["doc_id"].to_numpy()[:] = -1
+            first["score"].to_numpy()[:] = -1.0
+            assert (first["doc_id"] == -1).all()  # the mutation landed
+            pd.testing.assert_frame_equal(s.search_point("term00003", k=k), want)
+    finally:
+        s.close()

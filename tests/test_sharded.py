@@ -484,3 +484,32 @@ def test_warm_url_read_does_not_block_hot_point_queries(
     assert not warm.is_alive()
     # the whole url map was installed once the read was released
     assert len(s0._url_cache) == s0._reader.n_docs()
+
+
+def test_federation_url_cache_cap_is_shared(spark, uneven_shards, tiny_queries):
+    """The federation's url LRU cap is split across its shards: each
+    shard's warm-time url map read and its LRU stay within its share, and
+    point answers keep their urls."""
+    from colbert_spark.query.wand import ShardedSearcher
+
+    a, b_, _ = uneven_shards
+    svc = ShardedSearcher(spark, [a, b_])
+    try:
+        assert svc.url_cache_max == 1 << 20  # the shard default, split
+        assert [s.url_cache_max for s in svc.searchers] == [1 << 19] * 2
+        want = {
+            q: list(svc.search_point(q, k=10)["url"])
+            for q in tiny_queries["question"][:5]
+        }
+        svc.url_cache_max = 50  # under either shard's doc count
+        assert [s.url_cache_max for s in svc.searchers] == [25, 25]
+        for s in svc.searchers:
+            s._url_cache.clear()
+        svc.warm()
+        for q in tiny_queries["question"][:5]:
+            assert list(svc.search_point(q, k=10)["url"]) == want[q], q
+        for s in svc.searchers:
+            assert s._reader.n_docs() > 25
+            assert 0 < len(s._url_cache) <= 25
+    finally:
+        svc.close()
