@@ -127,7 +127,10 @@ def _point_result(docs: np.ndarray, scores: np.ndarray, k: int) -> pd.DataFrame:
     doc_id ASC) as int64/int64/float64 rank/doc_id/score over a RangeIndex.
     Built straight from the column arrays: `pd.DataFrame(dict)` spends ~2×
     as long validating and aligning what is known here. `docs[sel]` and
-    `scores[sel]` are fresh copies, so no frame shares a cached array."""
+    `scores[sel]` are fresh copies, so no frame shares a cached array.
+    `_from_arrays` is private pandas API, checked against pandas 2.2.2:
+    after a pandas upgrade, rerun
+    `test_point_result_frame_matches_public_constructor`."""
     sel = np.lexsort((docs, -scores))[:k]
     n = len(sel)
     return pd.DataFrame._from_arrays(
@@ -422,52 +425,65 @@ def _score_query_in_bucket(
     return cands[sel], scores[sel]
 
 
+def _zero_masked(
+    acc: np.ndarray,
+    lo: int,
+    neg: list[np.ndarray] = (),
+    req: list[list[np.ndarray]] = (),
+    excl_idx: np.ndarray | None = None,
+) -> None:
+    """The mask rules of every dense scatter (`_score_point_bucket`,
+    `_score_batch_dense`), applied to ONE query's accumulator `acc`, whose
+    slot i holds doc `lo + i`: zero the docs of each `neg` (exclude) docs
+    array, every doc outside any `req` group (a list of docs arrays; an
+    empty group — its terms have no postings in this bucket — zeroes the
+    whole span, since a doc's postings all live in its own bucket), and
+    the `excl_idx` slots (tombstones already offset by `lo`)."""
+    for g in req:
+        live = np.zeros(len(acc), dtype=bool)
+        for docs in g:
+            live[docs - lo] = True
+        acc[~live] = 0.0
+    for docs in neg:
+        acc[docs - lo] = 0.0
+    if excl_idx is not None:
+        acc[excl_idx] = 0.0
+
+
 def _score_point_bucket(
-    terms: list[tuple[_TermBlocks, float]],
+    terms: list[tuple[np.ndarray, np.ndarray, float]],
+    lo: int,
+    hi: int,
     k: int,
-    k1: float,
-    b: float,
-    avgdl: float,
-    neg: list[_TermBlocks] | None = None,
-    req: list[list[_TermBlocks]] | None = None,
+    neg: list[np.ndarray] = (),
+    req: list[list[np.ndarray]] = (),
     excluded: np.ndarray | None = None,
 ) -> tuple[np.ndarray, np.ndarray]:
-    """The point path's dense pass: ONE query in one bucket over the cached
-    whole-term (docs, units) arrays. `terms` are the query's terms present
-    in the bucket, ascending term_id. Returns the bucket's top-k KEEPING
-    ties at the kth score (one `np.partition`); the caller's (−score,
-    doc_id) cut resolves them. The docs array may be a term's cached one:
-    callers index or concatenate it, never hand it out.
+    """The point path's dense pass: ONE query in one bucket over already
+    fetched whole-term arrays. `terms` are (docs, units, qtf) of the
+    query's terms present in the bucket, ascending term_id; `lo`..`hi` is
+    the doc span of every array passed, masks included; `neg`/`req` are
+    docs arrays as `_zero_masked` takes them and `excluded` the sorted
+    global tombstone ids. Returns the bucket's top-k KEEPING ties at the
+    kth score (one `np.partition`); the caller's (−score, doc_id) cut
+    resolves them. The docs array may be a term's cached one: callers
+    index or concatenate it, never hand it out.
 
     One term and no mask: the scores are `qtf · units` (units are never 0,
     and 0.0 + x == x, so this is the accumulator's value bit for bit).
-    Otherwise the terms scatter-add over the bucket's doc span in ascending
-    term_id order — the oracle's float64 order — and the masks zero slots
-    exactly as `_score_batch_dense` does: `neg` (exclude) docs, docs
-    outside any `req` group (a group with no blocks here empties the
-    bucket), and `excluded` (small tombstone set, sorted global ids)."""
+    Otherwise the terms scatter-add over the span in ascending term_id
+    order — the oracle's float64 order — then `_zero_masked` applies the
+    masks."""
     if len(terms) == 1 and not neg and not req and excluded is None:
-        tb, qtf = terms[0]
-        docs, units = tb.full(k1, b, avgdl)
+        docs, units, qtf = terms[0]
         scores = qtf * units
     else:
-        tbs = [tb for tb, _ in terms] + (neg or [])
-        tbs += [t for g in req or () for t in g]
-        lo = min(tb.lo for tb in tbs)
-        hi = max(tb.hi for tb in tbs)
         acc = np.zeros(hi - lo + 1, dtype=np.float64)
-        for tb, qtf in terms:
-            tdocs, units = tb.full(k1, b, avgdl)
+        for tdocs, units, qtf in terms:
             acc[tdocs - lo] += qtf * units
-        for g in req or ():
-            live = np.zeros(hi - lo + 1, dtype=bool)
-            for tb in g:
-                live[tb.full(k1, b, avgdl)[0] - lo] = True
-            acc[~live] = 0.0
-        for tb in neg or ():
-            acc[tb.full(k1, b, avgdl)[0] - lo] = 0.0
         if excluded is not None:
-            acc[excluded[(excluded >= lo) & (excluded <= hi)] - lo] = 0.0
+            excluded = excluded[(excluded >= lo) & (excluded <= hi)] - lo
+        _zero_masked(acc, lo, neg, req, excluded)
         docs = np.flatnonzero(acc)
         scores = acc[docs]
         docs += lo
@@ -513,8 +529,8 @@ def _prune_score_bucket(
     (conservative only — extra survivors re-score exactly), so float
     rounding in the bound arithmetic can never drop a true top-k doc.
     Where selection cannot pay (the PRE- and POST-checks below), the
-    bucket degrades to the point dense pass (`_score_point_bucket`) and
-    then the same θ filter. Returns (docs, scores, used_dense): the
+    bucket degrades to the point dense pass (`_score_point_bucket`) over
+    the arrays already fetched here, then the same θ filter. Returns (docs, scores, used_dense): the
     bucket's top-k keeping ties at the kth score, plus whether it went
     dense — the caller passes that back as `dense_hint` so a query whose
     first (highest-bound) bucket proved unselective skips selection in the
@@ -613,7 +629,10 @@ def _prune_score_bucket(
         # the pruned path's cost floor: the point dense pass over the same
         # cached arrays, ≈ its per-query work, never more
         stats["postings_scanned"] += total_postings
-        cands, scores = _score_point_bucket(terms, k, k1, b, avgdl)
+        cands, scores = _score_point_bucket(
+            [(d, u, qtf) for (d, u), (_, qtf) in zip(arrs, terms)],
+            lo, lo + span - 1, k,
+        )
     else:
         stats["postings_skipped"] += total_postings - ess_postings
         scores = exact_scores(cands)
@@ -747,26 +766,12 @@ def _score_batch_dense(
                 continue  # this query's allowed set misses the bucket
             amask = np.zeros(hi - lo + 1, dtype=bool)
             amask[qa - lo] = True
-        rmask = None
-        if req_map is not None and qid in req_map:
-            dead = False
-            for grp in req_map[qid]:
-                gmask = np.zeros(hi - lo + 1, dtype=bool)
-                hit = False
-                for rt in grp:
-                    rtb = groups.get(int(rt))
-                    if rtb is not None:
-                        rdocs, _ = rtb.full(k1, b, avgdl)
-                        gmask[rdocs - lo] = True
-                        hit = True
-                if not hit:
-                    # the whole group is absent from this bucket: no doc
-                    # here can satisfy the conjunction
-                    dead = True
-                    break
-                rmask = gmask if rmask is None else (rmask & gmask)
-            if dead:
-                continue
+        req = [
+            [groups[rt].full(k1, b, avgdl)[0] for rt in map(int, grp) if rt in groups]
+            for grp in (req_map or {}).get(qid, ())
+        ]
+        if not all(req):
+            continue  # `_zero_masked` would zero the whole span: skip the scatter
         acc[:] = 0.0
         if cnt is not None:
             cnt[:] = 0
@@ -779,18 +784,13 @@ def _score_batch_dense(
             acc[~mask] = 0.0
         if amask is not None:
             acc[~amask] = 0.0
-        if rmask is not None:
-            acc[~rmask] = 0.0
         if cnt is not None:
             acc[cnt < thr] = 0.0
-        if neg_map is not None:
-            for nt in neg_map.get(qid, ()):
-                ntb = groups.get(int(nt))
-                if ntb is not None:
-                    ndocs, _ = ntb.full(k1, b, avgdl)
-                    acc[ndocs - lo] = 0.0
-        if excl_idx is not None:
-            acc[excl_idx] = 0.0
+        neg = [
+            groups[nt].full(k1, b, avgdl)[0]
+            for nt in map(int, (neg_map or {}).get(qid, ())) if nt in groups
+        ]
+        _zero_masked(acc, lo, neg, req, excl_idx)
         nz = np.flatnonzero(acc)
         if not nz.size:
             continue
@@ -2495,10 +2495,14 @@ class IndexSearcher:
             terms = [(tbs[bk], qtf) for tbs, qtf in pos if bk in tbs]
             if not terms:
                 continue
+            ntbs = [m[bk] for m in neg if bk in m]
+            rtbs = [[m[bk] for m in g if bk in m] for g in req]
+            span = [tb for tb, _ in terms] + ntbs + [t for g in rtbs for t in g]
             d, s = _score_point_bucket(
-                terms, k, k1, b, avgdl,
-                neg=[m[bk] for m in neg if bk in m] if neg else None,
-                req=[[m[bk] for m in g if bk in m] for g in req] if req else None,
+                [(*tb.full(k1, b, avgdl), qtf) for tb, qtf in terms],
+                min([tb.lo for tb in span]), max([tb.hi for tb in span]), k,
+                neg=[tb.full(k1, b, avgdl)[0] for tb in ntbs],
+                req=[[tb.full(k1, b, avgdl)[0] for tb in g] for g in rtbs],
                 excluded=self._tomb,
             )
             out_d.append(d)
@@ -2968,9 +2972,10 @@ class ShardedSearcher:
         self.avgdl_global = cf_g / self.n_global if self.n_global else 0.0
         for s in self.searchers:
             s.with_global_stats(self.n_global, self.avgdl_global, {})
-        # the shards' url LRUs split one federation-wide cap (the shard
-        # default), so warm()'s url-map reads stay bounded as shards grow
-        self.url_cache_max = self.searchers[0].url_cache_max
+        # the shards' url LRUs split the one-searcher cap, so warm()'s
+        # url-map reads stay bounded per federation as shards are added
+        for s in self.searchers:
+            s.url_cache_max //= len(self.searchers)
         self._df_g: dict[str, int] = {}
         self._lock = threading.Lock()
         self._pool = ThreadPoolExecutor(
@@ -2978,16 +2983,6 @@ class ShardedSearcher:
         )
         if warm:
             self.warm()
-
-    @property
-    def url_cache_max(self) -> int:
-        """Resident doc_id → url entries across all shards."""
-        return sum(s.url_cache_max for s in self.searchers)
-
-    @url_cache_max.setter
-    def url_cache_max(self, total: int) -> None:
-        for s in self.searchers:
-            s.url_cache_max = total // len(self.searchers)
 
     def warm(self, prefetch_point: bool = True) -> "ShardedSearcher":
         """Warm every shard (resident segment cache + dictionary) and, by
@@ -2999,7 +2994,7 @@ class ShardedSearcher:
         list(self._pool.map(lambda s: s.warm(), self.searchers))
         if prefetch_point:
             # resident url map per shard: when the whole shard's url map
-            # fits its share of `url_cache_max` (row count from the parquet
+            # fits its share of the url cap (row count from the parquet
             # footers), read it ONCE at warm so result resolution
             # (`_lookup_urls`) never reads per query; above the cap, misses
             # stay one pushed driver-side read each. The read runs outside

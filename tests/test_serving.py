@@ -820,13 +820,13 @@ def _check_point_pass(s: IndexSearcher, question, exclude, require):
             neg_map={0: np.array(neg, dtype=np.int64)} if neg else None,
             excluded=s._tomb, req_map={0: req} if req else None,
         )
+        docs = {t: tb.full(k1, b, avgdl)[0] for t, tb in groups.items()}
         nd, ns = _score_point_bucket(
-            terms, K, k1, b, avgdl,
-            neg=[groups[t] for t in neg if t in groups] if neg else None,
-            req=(
-                [[groups[int(t)] for t in g if int(t) in groups] for g in req]
-                if req else None
-            ),
+            [(*tb.full(k1, b, avgdl), q) for tb, q in terms],
+            min(tb.lo for tb in groups.values()),
+            max(tb.hi for tb in groups.values()), K,
+            neg=[docs[t] for t in neg if t in groups],
+            req=[[docs[int(t)] for t in g if int(t) in groups] for g in req],
             excluded=s._tomb,
         )
         sel = np.lexsort((nd, -ns))[:K]
@@ -895,7 +895,10 @@ def test_point_dense_pass_matches_batch_kernel(spark, snapshots, snap, monkeypat
             pd_, ps, used = wand._prune_score_bucket(
                 terms, K, 0.0, k1, b, avgdl, st, dense_hint=True
             )
-            nd, ns = wand._score_point_bucket(terms, K, k1, b, avgdl)
+            nd, ns = wand._score_point_bucket(
+                [(*tb.full(k1, b, avgdl), q) for tb, q in terms],
+                min(tb.lo for tb, _ in terms), max(tb.hi for tb, _ in terms), K,
+            )
             assert used and pd_.tolist() == nd.tolist()
             assert (ps == ns).all()
         # through search_point: one term is all essential, so the
