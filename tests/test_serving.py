@@ -803,6 +803,18 @@ def _check_point_pass(s: IndexSearcher, question, exclude, require):
     all_ids = sorted(
         set(tids.tolist()) | set(neg) | {int(t) for g in req for t in g}
     )
+
+    def docs_of(term_ids) -> set[int]:
+        return {
+            int(d) for t in term_ids for tb in s._point_tbs[int(t)].values()
+            for d in tb.full(k1, b, avgdl)[0]
+        }
+
+    # the masks by set membership, independent of the shared `_zero_masked`
+    hits = set(got["doc_id"].tolist())
+    assert not hits & docs_of(neg), question
+    assert all(hits <= docs_of(g) for g in req), question
+    assert s._tomb is None or not hits & set(s._tomb.tolist()), question
     seen = {"single": 0, "absent": 0, "dead_require": 0}
     old_d, old_s = [np.empty(0, np.int64)], [np.empty(0, np.float64)]
     for bk in sorted({bk for t in all_ids for bk in s._point_tbs[t]}):
