@@ -76,26 +76,23 @@ def vb_encode(values: np.ndarray) -> bytes:
     return buf.tobytes()
 
 
-def vb_decode(buf: bytes) -> np.ndarray:
-    """Decode LEB128 varbytes back to an int64 array (vectorized)."""
+def vb_decode(buf) -> np.ndarray:
+    """Decode LEB128 varbytes (bytes or a uint8 array) back to an int64
+    array (vectorized: one shift per byte, one `reduceat` per value)."""
     b = np.frombuffer(buf, dtype=np.uint8)
     if b.size == 0:
         return np.empty(0, dtype=np.int64)
-    is_last = (b & 0x80) == 0  # terminator byte of each value
-    ends = np.flatnonzero(is_last)  # index of last byte per value
-    n = ends.size
+    is_last = b < 0x80  # terminator byte of each value
+    n = int(is_last.sum())
     starts = np.empty(n, dtype=np.int64)
     starts[0] = 0
-    starts[1:] = ends[:-1] + 1
-    payload = (b & 0x7F).astype(np.uint64)
-    # group index of each byte within its value
-    byte_idx = np.arange(b.size, dtype=np.int64)
+    starts[1:] = np.flatnonzero(is_last)[:-1] + 1
     value_id = np.cumsum(is_last) - is_last  # which value each byte belongs to
-    group = byte_idx - starts[value_id]
-    shifted = payload << (np.uint64(7) * group.astype(np.uint64))
-    out = np.zeros(n, dtype=np.uint64)
-    np.add.at(out, value_id, shifted)
-    return out.astype(np.int64)
+    # group index of each byte within its value (IndexError on a stream
+    # that does not end with a terminator)
+    group = np.arange(b.size, dtype=np.int64) - starts[value_id]
+    shifted = (b & 0x7F).astype(np.uint64) << (np.uint64(7) * group.astype(np.uint64))
+    return np.add.reduceat(shifted, starts).astype(np.int64)
 
 
 def vb_encode_payloads(
@@ -160,6 +157,7 @@ def decode_postings(doc_bytes: bytes, tf_bytes: bytes) -> tuple[np.ndarray, np.n
 
 _PFOR_HDR = 3  # w, n, n_exc — one byte each
 _SHIFTS_U64 = np.arange(64, dtype=np.uint64)  # shared shift vector
+_LOW_MASKS = (np.uint64(1) << _SHIFTS_U64) - np.uint64(1)  # w → low w bits
 
 
 def _bitlens(v: np.ndarray) -> np.ndarray:
@@ -211,34 +209,75 @@ def decode_block(buf: bytes, prefixed: bool = True) -> np.ndarray:
     return vb_decode(buf[1:])
 
 
-def decode_blocks(bufs, prefixed: bool = True) -> np.ndarray:
-    """Decode a sequence of block payloads into one int64 array, equal to
-    `np.concatenate([decode_block(b, prefixed) for b in bufs])`. Varbyte is
-    self-delimiting, so every varbyte body decodes in ONE vectorized pass
-    over the joined bytes; only PForDelta bodies decode block by block."""
+def decode_blocks(bufs, prefixed: bool = True) -> tuple[np.ndarray, np.ndarray]:
+    """Decode a sequence of block payloads → (values, counts): one int64
+    array equal to `np.concatenate([decode_block(b, prefixed) for b in
+    bufs])` and each block's value count. Vectorized over the joined bytes,
+    with no per-block Python: every varbyte run — varbyte bodies and the
+    PForDelta exception high bits alike (LEB128 is self-delimiting) —
+    decodes in ONE `vb_decode` pass, and every PForDelta value is one
+    unaligned little-endian 8-byte window read at its bit offset. Per-value
+    temporaries are kept to uint8 where they fit: compaction decodes
+    500k-posting slabs in every Python worker at once."""
     bufs = list(bufs)
-    if not prefixed:
-        return vb_decode(b"".join(bufs))
-    raw = np.frombuffer(b"".join(bufs), dtype=np.uint8)
     lens = np.fromiter(map(len, bufs), dtype=np.int64, count=len(bufs))
-    starts = np.cumsum(lens) - lens
-    is_pfor = raw[starts] == CODEC_PFOR
-    blk = np.repeat(np.arange(len(lens)), lens)
-    vb = ~is_pfor[blk]
-    vb[starts] = False  # codec tag bytes
-    if not is_pfor.any():
-        return vb_decode(raw[vb])
-    # values per block: varbyte terminators, or the pfor header's n (the
-    # byte after the tag and w)
-    counts = np.bincount(blk[vb & (raw < 0x80)], minlength=len(lens))
-    counts[is_pfor] = raw[starts[is_pfor] + 2]
+    raw = np.frombuffer(b"".join(bufs), dtype=np.uint8)
+    ends = np.cumsum(lens)
+    starts = ends - lens
+    if not prefixed:
+        last = np.flatnonzero(raw < 0x80)
+        return vb_decode(raw), np.searchsorted(last, ends) - np.searchsorted(last, starts)
+    is_pfor = raw[starts] == CODEC_PFOR  # every v3 payload has its tag byte
+    p = np.flatnonzero(is_pfor)
+    body = starts[p] + 1 + _PFOR_HDR  # first packed byte of each pfor block
+    w = raw[body - 3]
+    n = raw[body - 2].astype(np.int64)
+    n_exc = raw[body - 1].astype(np.int64)
+    exc_at = body + (n * w + 7) // 8  # exception positions, then high bits
+    # each block's varbyte run: after its tag, or after a pfor block's
+    # exception positions, to the block's end — marked by one int8 cumsum
+    vstart = starts + 1
+    vstart[p] = exc_at + n_exc
+    mark = np.zeros(len(raw) + 1, dtype=np.int8)
+    mark[vstart] += 1
+    mark[ends] -= 1
+    varint = np.cumsum(mark[:-1], dtype=np.int8).view(bool)
+    last = np.flatnonzero(varint & (raw < 0x80))
+    vcount = np.searchsorted(last, ends) - np.searchsorted(last, starts)
+    vals = vb_decode(raw[varint])  # varbyte values; n_exc per pfor block
+    counts = vcount.copy()
+    counts[p] = n
+    out = np.empty(int(counts.sum()), dtype=np.int64)
     in_vb = np.repeat(~is_pfor, counts)
-    out = np.empty(len(in_vb), dtype=np.int64)
-    out[in_vb] = vb_decode(raw[vb])
-    out[~in_vb] = np.concatenate(
-        [pfor_decode(bufs[i][1:]) for i in np.flatnonzero(is_pfor)]
-    )
-    return out
+    is_high = np.repeat(is_pfor, vcount)
+    out[in_vb] = vals[~is_high]
+    if not p.size:
+        return out, counts
+    # value i of pfor block j holds bits [8·body_j + i·w_j, +w_j): read the
+    # 8 bytes from its first byte, shift, and OR in a ninth byte where
+    # shift + w > 64 (w > 56 only; values are non-negative int64, w ≤ 63)
+    first = np.cumsum(n) - n
+    wv = np.repeat(w, n)
+    bit = np.arange(len(wv), dtype=np.int64)
+    bit *= wv
+    bit += np.repeat(8 * body - first * w, n)
+    sh = bit.astype(np.uint8) & np.uint8(7)
+    bit >>= 3
+    padded = np.concatenate([raw, np.zeros(9, dtype=np.uint8)])
+    pv = np.lib.stride_tricks.sliding_window_view(padded, 8)[bit].view("<u8").ravel()
+    wide = np.flatnonzero(sh + wv > 64)
+    ninth = padded[bit[wide] + 8].astype(np.uint64)
+    del bit
+    pv >>= sh
+    pv[wide] |= ninth << (np.uint64(64) - sh[wide])
+    pv &= _LOW_MASKS[wv]
+    if n_exc.any():
+        ex = np.repeat(np.arange(len(p)), n_exc)
+        k = np.arange(len(ex)) - (np.cumsum(n_exc) - n_exc)[ex]
+        idx = first[ex] + raw[exc_at[ex] + k]
+        pv[idx] |= vals[is_high].astype(np.uint64) << w[ex]
+    out[~in_vb] = pv.view(np.int64)
+    return out, counts
 
 
 def encode_block_payloads(

@@ -100,18 +100,18 @@ def _reencode_rows(
     ns = pdf["n"].to_numpy(np.int64)
     # one vectorized decode per column over the whole slab; doc deltas
     # restart at each block's first (absolute) doc id
-    d = decode_blocks(pdf["doc_bytes"], prefixed_in)
+    d, _ = decode_blocks(pdf["doc_bytes"], prefixed_in)
     cs = np.cumsum(d)
     first = np.cumsum(ns) - ns
     docs = cs - np.repeat(cs[first] - d[first], ns)
-    tfs = decode_blocks(pdf["tf_bytes"], prefixed_in)
-    dls = decode_blocks(pdf["dl_bytes"], prefixed_in)
+    tfs, _ = decode_blocks(pdf["tf_bytes"], prefixed_in)
+    dls, _ = decode_blocks(pdf["dl_bytes"], prefixed_in)
     if has_pos:
         occ0 = np.zeros(len(tfs) + 1, dtype=np.int64)
         np.cumsum(tfs, out=occ0[1:])  # posting → global occurrence start
         # positions: per-posting-reset deltas → absolute (the tf column
         # delimits each posting's occurrence run)
-        d = decode_blocks(pdf["pos_bytes"], prefixed_in)
+        d, _ = decode_blocks(pdf["pos_bytes"], prefixed_in)
         cs = np.cumsum(d)
         first = occ0[:-1]
         abs_pos = cs - np.repeat(cs[first] - d[first], tfs)
@@ -412,7 +412,7 @@ def compact_index(
         from colbert_spark.index.delete import load_tombstones
 
         preserve_epochs = False
-        tomb = load_tombstones(spark, index_dir, stats)
+        tomb = load_tombstones(index_dir, stats)
         docs_name = stats.get("docs_dir", "docs")
         docs_df = spark.read.parquet(os.path.join(index_dir, docs_name))
         if tomb is not None:

@@ -43,6 +43,8 @@ from __future__ import annotations
 import json
 import os
 
+import numpy as np
+import pyarrow.dataset as pads
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -122,15 +124,20 @@ def upsert_index(
     return append_index(spark, new_pages, index_dir, use_html=use_html)
 
 
-def load_tombstones(spark: SparkSession, index_dir: str, stats: dict):
-    """The live tombstone set as a sorted int64 ndarray, or None. See the
-    module docstring for the driver-memory contract."""
-    import numpy as np
-
+def load_tombstones(index_dir: str, stats: dict):
+    """The live tombstone set as a sorted int64 ndarray, or None. Read on
+    the driver through pyarrow, no Spark job; like `spark.read.parquet`,
+    pyarrow's default `ignore_prefixes` skip '.' and '_' files (`.crc`,
+    `_SUCCESS`). See the module docstring for the driver-memory contract."""
     name = stats.get("tomb_dir")
     if not name:
         return None
-    rows = spark.read.parquet(os.path.join(index_dir, name)).collect()
-    if not rows:
+    ids = (
+        pads.dataset(os.path.join(index_dir, name), format="parquet")
+        .to_table(columns=["doc_id"])
+        .column("doc_id")
+        .to_numpy()
+    )
+    if not len(ids):
         return None
-    return np.array(sorted(r["doc_id"] for r in rows), dtype=np.int64)
+    return np.sort(ids.astype(np.int64))

@@ -80,7 +80,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from colbert_spark.functions.tokenizer import py_tokenize
-from colbert_spark.index.codec import decode_block
+from colbert_spark.index.codec import decode_block, decode_blocks
 
 KERNEL_OUT_SCHEMA = "qid long, doc_id long, score double"
 TOPK_SCHEMA = "qid long, rank int, doc_id long, score double"
@@ -103,13 +103,9 @@ class Resolved(NamedTuple):
     # at resolution (a required term with no postings matches nothing).
     req_map: dict = {}
 
-_EMPTY = pd.DataFrame(
-    {
-        "qid": pd.Series([], dtype="int64"),
-        "doc_id": pd.Series([], dtype="int64"),
-        "score": pd.Series([], dtype="float64"),
-    }
-)
+_NO_DOCS = np.empty(0, dtype=np.int64)
+_NO_SCORES = np.empty(0, dtype=np.float64)
+_EMPTY = pd.DataFrame({"qid": _NO_DOCS, "doc_id": _NO_DOCS, "score": _NO_SCORES})
 
 # the block-table columns the point path keeps per term (`_split_blocks`)
 _BLOCK_COLS = [
@@ -117,8 +113,6 @@ _BLOCK_COLS = [
     "doc_bytes", "tf_bytes", "dl_bytes",
 ]
 
-_NO_DOCS = np.empty(0, dtype=np.int64)
-_NO_SCORES = np.empty(0, dtype=np.float64)
 _POINT_COLS = pd.Index(["rank", "doc_id", "score"])
 
 
@@ -145,30 +139,24 @@ def _point_result(docs: np.ndarray, scores: np.ndarray, k: int) -> pd.DataFrame:
     )
 
 
-def _split_blocks(pdf: pd.DataFrame, term_ids: list[int]) -> dict:
-    """Point block-LRU entries (frame, bytes) per term of one collected
-    block table: a stable argsort + `searchsorted` split, O(rows log rows)
-    where a mask per term is O(terms × rows). Each frame keeps its rows'
-    collect order, owns its memory and has a RangeIndex. Bytes are what
-    `memory_usage(deep=True)` reports (values + object payloads), taken
-    from per-row prefix sums: that call costs ~0.3 ms per frame."""
-    tid = pdf["term_id"].to_numpy()
-    order = np.argsort(tid, kind="stable")
-    srt, ordered = tid[order], pdf.take(order)
-    row_nb = np.zeros(len(ordered), dtype=np.int64)
-    for c in ordered.columns:
-        v = ordered[c].to_numpy()
-        row_nb += v.itemsize
+def _split_blocks(cols: dict, term_ids: list[int]) -> dict:
+    """Point block-LRU entries (columns, bytes) per term of one block read,
+    whose numpy columns arrive sorted by term_id (`SnapshotReader.blocks`):
+    each term's rows are one `searchsorted` slice per column, copied so the
+    entry owns its memory, in read order. Bytes are the arrays' `nbytes`
+    plus the payloads' byte lengths, taken from per-row prefix sums."""
+    tid = cols["term_id"]
+    row_nb = np.full(len(tid), sum(v.itemsize for v in cols.values()), np.int64)
+    for v in cols.values():
         if v.dtype == object:
-            row_nb += np.array([x.__sizeof__() for x in v], np.int64)
+            row_nb += np.fromiter(map(len, v), np.int64, len(v))
     cum = np.concatenate([[0], np.cumsum(row_nb)]).tolist()
-    lo = np.searchsorted(srt, term_ids, side="left")
-    hi = np.searchsorted(srt, term_ids, side="right")
-    out: dict[int, tuple[pd.DataFrame, int]] = {}
-    for t, a, z in zip(term_ids, lo.tolist(), hi.tolist()):
-        sub = ordered.iloc[a:z].reset_index(drop=True)
-        out[t] = (sub, cum[z] - cum[a] + sub.index.memory_usage(deep=True))
-    return out
+    lo = np.searchsorted(tid, term_ids, side="left").tolist()
+    hi = np.searchsorted(tid, term_ids, side="right").tolist()
+    return {
+        t: ({c: v[a:z].copy() for c, v in cols.items()}, cum[z] - cum[a])
+        for t, a, z in zip(term_ids, lo, hi)
+    }
 
 
 def _bm25(tfs: np.ndarray, dls: np.ndarray, idf: float, k1: float, b: float, avgdl: float):
@@ -260,26 +248,25 @@ class _TermBlocks:
 
     def __init__(
         self,
-        sub: pd.DataFrame,
+        sub,
         idf: float,
         prefixed: bool = True,
         max_scale: float = 1.0,
         budget: "_DecodeBudget | None" = None,
     ):
+        # `sub`: a kernel's pandas sub-frame or a point LRU entry's columns
         self.budget = budget
         self.idf = float(idf)
         self.prefixed = prefixed
-        self.maxs = sub["max_unit"].to_numpy(np.float64) * (self.idf * max_scale)
-        self.firsts = sub["first_doc"].to_numpy(np.int64)
-        self.lasts = sub["last_doc"].to_numpy(np.int64)
+        self.maxs = np.asarray(sub["max_unit"], np.float64) * (self.idf * max_scale)
+        self.firsts = np.asarray(sub["first_doc"], np.int64)
+        self.lasts = np.asarray(sub["last_doc"], np.int64)
         # the term's doc span in this bucket: every dense scatter's bounds
         self.lo = int(self.firsts.min())
         self.hi = int(self.lasts.max())
         self.unit_max = float(self.maxs.max())
-        self.rows = (
-            sub["doc_bytes"].to_numpy(),
-            sub["tf_bytes"].to_numpy(),
-            sub["dl_bytes"].to_numpy(),
+        self.rows = tuple(
+            np.asarray(sub[c]) for c in ("doc_bytes", "tf_bytes", "dl_bytes")
         )
         self._dec: dict[int, tuple] = {}
         self._full: tuple[np.ndarray, np.ndarray] | None = None
@@ -305,18 +292,7 @@ class _TermBlocks:
         np.add.at. unit = idf·tf·(k1+1)/(tf+K·dl) so a query's contribution
         is just qtf × unit."""
         if self._full is None:
-            order = np.argsort(self.firsts, kind="stable")
-            parts = [self.decode(int(i)) for i in order]
-            docs = np.concatenate([p[0] for p in parts])
-            tfs = np.concatenate([p[1] for p in parts])
-            dls = np.concatenate([p[2] for p in parts])
-            self._full = (docs, _bm25(tfs, dls, self.idf, k1, b, avgdl))
-            # the dense path never reads block-grain decodes after the
-            # whole-term arrays exist — dropping them halves the resident
-            # expansion (a later decode() recomputes, it does not break)
-            self._dec.clear()
-            if self.budget is not None:
-                self.budget.admit(self)
+            _decode_terms([self], k1, b, avgdl)
         elif self.budget is not None:
             self.budget.touch(self)
         return self._full
@@ -356,6 +332,43 @@ class _TermBlocks:
             else:
                 self._seed = docs.copy()
         return self._seed
+
+
+def _decode_terms(tbs: list[_TermBlocks], k1: float, b: float, avgdl: float) -> None:
+    """Set `_full` (see `_TermBlocks.full`) on every `_TermBlocks` of `tbs`
+    with ONE `decode_blocks` call per payload column over all their blocks,
+    each term's blocks in first_doc order. Doc ids are one cumsum of the
+    deltas minus each block's running offset (a block's first delta is its
+    absolute doc id); units are `_bm25` with a per-posting idf array — the
+    same float ops, element for element, as a per-term call. Several terms
+    get copies of their slices, so evicting one frees its bytes."""
+    orders = [np.argsort(tb.firsts, kind="stable") for tb in tbs]
+    (d, counts), (tfs, _), (dls, _) = (
+        decode_blocks(
+            np.concatenate([tb.rows[c][o] for tb, o in zip(tbs, orders)]),
+            tbs[0].prefixed,
+        )
+        for c in range(3)
+    )
+    cs = np.cumsum(d)
+    first = np.cumsum(counts) - counts
+    docs = cs - np.repeat(cs[first] - d[first], counts)
+    # each term's first posting
+    bounds = np.concatenate([[0], np.cumsum(counts)])[
+        np.cumsum([0] + [len(tb.firsts) for tb in tbs])
+    ].tolist()
+    idf = np.repeat([tb.idf for tb in tbs], np.diff(bounds))
+    units = _bm25(tfs, dls, idf, k1, b, avgdl)
+    for tb, a, z in zip(tbs, bounds, bounds[1:]):
+        tb._full = (
+            (docs, units) if len(tbs) == 1
+            else (docs[a:z].copy(), units[a:z].copy())
+        )
+        # the dense path never reads block-grain decodes after the
+        # whole-term arrays exist (a later decode() recomputes)
+        tb._dec.clear()
+        if tb.budget is not None:
+            tb.budget.admit(tb)
 
 
 def _score_query_in_bucket(
@@ -813,6 +826,34 @@ def _score_batch_dense(
     return out_q, out_d, out_s
 
 
+def _term_groups(
+    pdf: pd.DataFrame, idf_map: dict, prefixed: bool, max_scale: float, cap: int
+) -> dict[int, _TermBlocks]:
+    """term_id → `_TermBlocks` of one bucket frame, sharing one
+    `_DecodeBudget(cap)` for the kernel invocation."""
+    budget = _DecodeBudget(cap)
+    return {
+        int(tid): _TermBlocks(
+            sub.sort_values("first_doc"), idf_map[int(tid)], prefixed, max_scale,
+            budget=budget,
+        )
+        for tid, sub in pdf.groupby("term_id", sort=False)
+    }
+
+
+def _kernel_frame(out_q: list, out_d: list, out_s: list) -> pd.DataFrame:
+    """A scoring kernel's (qid, doc_id, score) output frame."""
+    if not out_q:
+        return _EMPTY
+    return pd.DataFrame(
+        {
+            "qid": np.concatenate(out_q),
+            "doc_id": np.concatenate(out_d),
+            "score": np.concatenate(out_s),
+        }
+    )
+
+
 def make_batch_kernel(
     query_batch,
     k: int,
@@ -846,14 +887,9 @@ def make_batch_kernel(
         neg_map = rest[0] if len(rest) > 0 else None
         excluded = rest[1] if len(rest) > 1 else None
         req_map = rest[2] if len(rest) > 2 else None
-        budget = _DecodeBudget(decode_cache_bytes)
-        groups: dict[int, _TermBlocks] = {}
-        for tid, sub in pdf.groupby("term_id", sort=False):
-            tid = int(tid)
-            groups[tid] = _TermBlocks(
-                sub.sort_values("first_doc"), idf_map[tid], prefixed, max_scale,
-                budget=budget,
-            )
+        groups = _term_groups(
+            pdf, idf_map, prefixed, max_scale, decode_cache_bytes
+        )
         if (
             len(batch) >= dense_min
             or min_match != 1
@@ -883,15 +919,7 @@ def make_batch_kernel(
                     out_q.append(np.full(len(docs), qid, dtype=np.int64))
                     out_d.append(docs)
                     out_s.append(scores)
-        if not out_q:
-            return _EMPTY
-        return pd.DataFrame(
-            {
-                "qid": np.concatenate(out_q),
-                "doc_id": np.concatenate(out_d),
-                "score": np.concatenate(out_s),
-            }
-        )
+        return _kernel_frame(out_q, out_d, out_s)
 
     return kernel
 
@@ -1005,14 +1033,9 @@ def make_filtered_kernel(
         filtered_qids = rest[3] if len(rest) > 3 else None
         if not len(allowed_pdf) and not filtered_qids:
             return _EMPTY  # classic global-allowed: empty slice = no docs
-        budget = _DecodeBudget(decode_cache_bytes)
-        groups: dict[int, _TermBlocks] = {}
-        for tid, sub in seg_pdf.groupby("term_id", sort=False):
-            tid = int(tid)
-            groups[tid] = _TermBlocks(
-                sub.sort_values("first_doc"), idf_map[tid], prefixed, max_scale,
-                budget=budget,
-            )
+        groups = _term_groups(
+            seg_pdf, idf_map, prefixed, max_scale, decode_cache_bytes
+        )
         # an allowed side carrying a `qid` column is PER-QUERY: each qid's
         # rows constrain only that query; qids absent stay unfiltered
         # (the query-string path's phrase-clause filters). Without `qid`
@@ -1034,15 +1057,7 @@ def make_filtered_kernel(
             neg_map=neg_map, excluded=excluded, req_map=req_map,
             allowed_map=allowed_map,
         )
-        if not out_q:
-            return _EMPTY
-        return pd.DataFrame(
-            {
-                "qid": np.concatenate(out_q),
-                "doc_id": np.concatenate(out_d),
-                "score": np.concatenate(out_s),
-            }
-        )
+        return _kernel_frame(out_q, out_d, out_s)
 
     return kernel
 
@@ -1077,14 +1092,9 @@ def make_masked_kernel(
         batch, idf_map, *rest = payload
         neg_map = rest[0] if len(rest) > 0 else None
         req_map = rest[1] if len(rest) > 1 else None
-        budget = _DecodeBudget(decode_cache_bytes)
-        groups: dict[int, _TermBlocks] = {}
-        for tid, sub in seg_pdf.groupby("term_id", sort=False):
-            tid = int(tid)
-            groups[tid] = _TermBlocks(
-                sub.sort_values("first_doc"), idf_map[tid], prefixed, max_scale,
-                budget=budget,
-            )
+        groups = _term_groups(
+            seg_pdf, idf_map, prefixed, max_scale, decode_cache_bytes
+        )
         excluded = (
             tomb_pdf["doc_id"].to_numpy(np.int64) if len(tomb_pdf) else None
         )
@@ -1092,15 +1102,7 @@ def make_masked_kernel(
             groups, batch, k, k1, b, avgdl, min_match=min_match,
             neg_map=neg_map, excluded=excluded, req_map=req_map,
         )
-        if not out_q:
-            return _EMPTY
-        return pd.DataFrame(
-            {
-                "qid": np.concatenate(out_q),
-                "doc_id": np.concatenate(out_d),
-                "score": np.concatenate(out_s),
-            }
-        )
+        return _kernel_frame(out_q, out_d, out_s)
 
     return kernel
 
@@ -1151,7 +1153,7 @@ class SnapshotReader:
     Spark job. Posting lists are columnar, statistics-pruned storage read by
     a vectorized scan (the columnar inverted index of ICDE 2025): tshard
     partition directories and parquet row-group statistics prune the files,
-    and Arrow hands the rows to pandas.
+    and Arrow hands the columns to numpy — no pandas on the read.
 
     The files are listed HERE, once, from the `stats` `load_index` read —
     as `spark.read.parquet` lists them there. A searcher is one immutable
@@ -1180,9 +1182,11 @@ class SnapshotReader:
 
     def terms(self, terms: list[str]) -> dict[str, tuple[int, int]]:
         """term → (term_id, df) for the in-vocabulary members of `terms`."""
+        # isin + between (as `pruned_scan`): min/max statistics prune files
+        term = pads.field("term")
         t = self.term_dict.to_table(
             columns=["term", "term_id", "df"],
-            filter=pads.field("term").isin(terms),
+            filter=term.isin(terms) & (term >= min(terms)) & (term <= max(terms)),
         )
         return {
             term: (tid, df)
@@ -1193,10 +1197,11 @@ class SnapshotReader:
             )
         }
 
-    def blocks(self, term_ids: list[int]) -> pd.DataFrame:
-        """`term_ids`' block rows as `_BLOCK_COLS` (Spark's dtypes: `bucket`
-        is int32 from hive inference on both sides), sorted by (term_id,
-        bucket, first_doc) so the frame never depends on file order."""
+    def blocks(self, term_ids: list[int]) -> dict[str, np.ndarray]:
+        """`term_ids`' block rows as a dict of `_BLOCK_COLS` numpy columns
+        (Spark's dtypes: `bucket` is int32 from hive inference on both
+        sides; payloads are object arrays of bytes), sorted by (term_id,
+        bucket, first_doc) so the rows never depend on file order."""
         f = pads.field("term_id").isin(term_ids)
         if self._tshards:  # directory pruning, as in `pruned_scan`
             f &= pads.field("tshard").isin(
@@ -1204,14 +1209,11 @@ class SnapshotReader:
             )
         if self._n is not None:
             f &= pads.field("first_doc") < self._n
-        return (
-            self.segments.to_table(columns=_BLOCK_COLS, filter=f)
-            .sort_by(
-                [("term_id", "ascending"), ("bucket", "ascending"),
-                 ("first_doc", "ascending")]
-            )
-            .to_pandas()
+        t = self.segments.to_table(columns=_BLOCK_COLS, filter=f).sort_by(
+            [("term_id", "ascending"), ("bucket", "ascending"),
+             ("first_doc", "ascending")]
         )
+        return {c: t.column(c).to_numpy() for c in _BLOCK_COLS}
 
     def urls(self, doc_ids: list[int] | None = None) -> dict[int, str]:
         """doc_id → url for `doc_ids`, or for every document (None)."""
@@ -1285,7 +1287,7 @@ class IndexSearcher:
             else:
                 from colbert_spark.index.delete import load_tombstones
 
-                self._tomb = load_tombstones(spark, index_dir, self.stats)
+                self._tomb = load_tombstones(index_dir, self.stats)
         self._warm: DataFrame | None = None
         # searcher-lifetime LRU of resolved terms (term → (term_id, df),
         # None = out-of-vocabulary) — sound because this searcher is one
@@ -1298,13 +1300,11 @@ class IndexSearcher:
         # per-task cap on resident DECODED postings inside the scoring
         # kernels (SCALE.md §query memory contract); settable per searcher
         self.decode_cache_bytes: int = DECODE_CACHE_BYTES
-        # point-serving block LRU (search_point): term_id → (block rows,
-        # bytes). Compressed payloads at on-disk density (~5-7 B/posting);
-        # capped at `point_cache_bytes`, sound for the searcher lifetime by
-        # the same immutable-snapshot argument as `_term_cache`.
-        self._block_cache: OrderedDict[int, tuple[pd.DataFrame, int]] = (
-            OrderedDict()
-        )
+        # point-serving block LRU (search_point): term_id → (numpy block
+        # columns, bytes; `_split_blocks`). Compressed payloads at on-disk
+        # density (~5-7 B/posting); capped at `point_cache_bytes`, sound for
+        # the searcher lifetime by the same argument as `_term_cache`.
+        self._block_cache: OrderedDict[int, tuple[dict, int]] = OrderedDict()
         self._block_cache_bytes: int = 0
         self.point_cache_bytes: int = 512 << 20
         # block reads (cache misses) through the snapshot reader
@@ -2487,6 +2487,11 @@ class IndexSearcher:
             self.point_prune_stats["queries_pruned"] += 1
             return self._score_point_pruned(pairs, k)
         self.point_prune_stats["queries_dense"] += 1
+        # every cold (term, bucket) of the query in one decode per column
+        cold = [tb for t in all_ids for tb in self._point_tbs[t].values()
+                if tb._full is None]
+        if cold:
+            _decode_terms(cold, k1, b, avgdl)
         pos = [(self._point_tbs[t], qtf) for t, qtf in pairs]
         neg = [self._point_tbs[t] for t in neg_tids]
         req = [[self._point_tbs[t] for t in g] for g in req_groups]
@@ -2517,12 +2522,17 @@ class IndexSearcher:
         enc_avgdl = self.stats.get("min_enc_avgdl") or avgdl
         max_scale = max(1.0, avgdl / enc_avgdl) if enc_avgdl else 1.0
         prefixed = self.stats.get("segver", 2) >= 3
+        # the entry's rows are sorted by (bucket, first_doc): one slice per
+        # bucket run
+        cols = self._block_cache[tid][0]
+        bk = cols["bucket"]
+        cuts = [0, *(np.flatnonzero(np.diff(bk)) + 1).tolist(), len(bk)]
         return {
-            int(bk): _TermBlocks(
-                s2.sort_values("first_doc"), idf, prefixed, max_scale,
+            int(bk[a]): _TermBlocks(
+                {c: v[a:z] for c, v in cols.items()}, idf, prefixed, max_scale,
                 budget=self._point_budget,
             )
-            for bk, s2 in self._block_cache[tid][0].groupby("bucket", sort=False)
+            for a, z in zip(cuts, cuts[1:]) if z > a
         }
 
     def _score_point_pruned(self, pairs, k) -> pd.DataFrame:
@@ -2653,10 +2663,7 @@ class IndexSearcher:
 
         prefixed = self.stats.get("segver", 2) >= 3
         bc = spark.sparkContext.broadcast((batch, self._tomb))
-        empty = pd.DataFrame(
-            {"qid": pd.Series([], dtype="int64"),
-             "doc_id": pd.Series([], dtype="int64")}
-        )
+        empty = pd.DataFrame({"qid": _NO_DOCS, "doc_id": _NO_DOCS})
 
         def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
             kbatch, excluded = bc.value
@@ -2738,14 +2745,8 @@ class IndexSearcher:
         k1, b, avgdl = self.stats["k1"], self.stats["b"], self.stats["avgdl"]
         bc = spark.sparkContext.broadcast((batch, idf_map, cand))
         empty = pd.DataFrame(
-            {
-                "qid": pd.Series([], dtype="int64"),
-                "doc_id": pd.Series([], dtype="int64"),
-                "term_id": pd.Series([], dtype="int64"),
-                "tf": pd.Series([], dtype="int64"),
-                "doclen": pd.Series([], dtype="int64"),
-                "contrib": pd.Series([], dtype="float64"),
-            }
+            {**dict.fromkeys(["qid", "doc_id", "term_id", "tf", "doclen"], _NO_DOCS),
+             "contrib": _NO_SCORES}
         )
 
         def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
@@ -2757,9 +2758,7 @@ class IndexSearcher:
                     sub.sort_values("first_doc"), kidf[tid], prefixed, 1.0
                 )
                 parts = [tb.decode(i) for i in range(len(tb.firsts))]
-                docs = np.concatenate([p[0] for p in parts])
-                tfs = np.concatenate([p[1] for p in parts])
-                dls = np.concatenate([p[2] for p in parts])
+                docs, tfs, dls = (np.concatenate(c) for c in zip(*parts))
                 units = _bm25(tfs, dls, kidf[tid], k1, b, avgdl)
                 decoded[tid] = (docs, tfs, dls, units)
             out = []

@@ -85,7 +85,7 @@ def _roundtrip(values, sizes):
         got = decode_block(p)
         assert got.tolist() == arr[starts[i]:ends[i]].tolist()
     # the batch decoder: mixed varbyte/pfor payloads back in block order
-    assert decode_blocks(payloads).tolist() == arr.tolist()
+    assert decode_blocks(payloads)[0].tolist() == arr.tolist()
     return payloads
 
 
@@ -161,7 +161,7 @@ def test_v2_unprefixed_decode_still_works():
     arr = np.array([3, 1, 4, 1, 5, 926], dtype=np.int64)
     assert decode_block(vb_encode(arr), prefixed=False).tolist() == arr.tolist()
     payloads = [vb_encode(arr[:2]), vb_encode(arr[2:])]
-    assert decode_blocks(payloads, prefixed=False).tolist() == arr.tolist()
+    assert decode_blocks(payloads, prefixed=False)[0].tolist() == arr.tolist()
 
 
 @settings(max_examples=100, deadline=None)
@@ -194,4 +194,91 @@ def test_vb_encode_payloads_slicing(values, data):
     assert len(payloads) == len(starts)
     for p, s, e in zip(payloads, bounds[:-1], bounds[1:]):
         assert decode_block(p).tolist() == values[s:e]
-    assert decode_blocks(payloads).tolist() == values
+    assert decode_blocks(payloads)[0].tolist() == values
+
+
+# --- batch decode: decode_blocks against the per-block decoder ------------
+
+
+def _assert_batch_decode(payloads, prefixed=True):
+    """decode_blocks == concatenated decode_block, counts == block lengths."""
+    parts = [decode_block(p, prefixed) for p in payloads]
+    got, counts = decode_blocks(payloads, prefixed)
+    assert got.dtype == np.int64 and counts.dtype == np.int64
+    want = np.concatenate(parts) if parts else np.empty(0, dtype=np.int64)
+    assert got.tolist() == want.tolist()
+    assert counts.tolist() == [len(x) for x in parts]
+
+
+def _block_values(rng, kind, n):
+    if kind == "zeros":  # PForDelta w = 0
+        return np.zeros(n, dtype=np.int64)
+    if kind == "narrow":  # PForDelta, no exceptions
+        return rng.integers(0, 16, n)
+    if kind == "exceptions":  # narrow with a few wide outliers
+        v = rng.integers(0, 8, n)
+        v[rng.integers(0, n, max(1, n // 16))] = rng.integers(1 << 20, 1 << 40)
+        return v
+    if kind == "wide":  # w near 64: values straddle nine bytes
+        return rng.integers(1 << 55, 1 << 62, n)
+    return rng.integers(0, 1 << int(rng.integers(1, 62)), n)  # any width
+
+
+KINDS = ["zeros", "narrow", "exceptions", "wide", "any"]
+
+
+def test_decode_blocks_covers_every_block_shape():
+    """One payload list holding every shape: PForDelta at w = 0, with and
+    without exceptions and at w > 56, varbyte bodies, n = 1 and n = 128."""
+    rng = np.random.default_rng(11)
+    payloads = []
+    for kind in KINDS:
+        for n in (1, 128, 37):
+            v = _block_values(rng, kind, n)
+            payloads += encode_block_payloads(
+                v, np.array([0]), np.array([n])
+            )
+            payloads.append(bytes([CODEC_VARBYTE]) + vb_encode(v))
+    pfor = [p for p in payloads if p[0] == CODEC_PFOR]
+    assert any(p[1] == 0 for p in pfor)  # w = 0
+    assert any(p[3] > 0 for p in pfor) and any(p[3] == 0 and p[1] for p in pfor)
+    assert any(p[1] > 56 for p in pfor)
+    assert {p[2] for p in pfor} >= {128}
+    _assert_batch_decode(payloads)
+    _assert_batch_decode(payloads[::-1])
+
+
+@settings(max_examples=150, deadline=None)
+@given(
+    st.lists(
+        st.tuples(
+            st.sampled_from(KINDS),
+            st.sampled_from([1, 128]) | st.integers(min_value=1, max_value=128),
+            st.booleans(),
+        ),
+        max_size=12,
+    ),
+    st.integers(min_value=0, max_value=2**32),
+)
+def test_decode_blocks_matches_per_block_decode(blocks, seed):
+    """Random mixes of varbyte and PForDelta payloads (the encoder's pick,
+    or a forced varbyte body) and of v2 unprefixed payloads, empty lists
+    included."""
+    rng = np.random.default_rng(seed)
+    tagged, raw = [], []
+    for kind, n, force_vb in blocks:
+        v = _block_values(rng, kind, n)
+        if force_vb:
+            tagged.append(bytes([CODEC_VARBYTE]) + vb_encode(v))
+        else:
+            tagged += encode_block_payloads(v, np.array([0]), np.array([n]))
+        raw.append(vb_encode(v))
+    _assert_batch_decode(tagged)
+    _assert_batch_decode(raw, prefixed=False)
+
+
+def test_decode_blocks_empty_input():
+    for prefixed in (True, False):
+        got, counts = decode_blocks([], prefixed)
+        assert got.dtype == counts.dtype == np.int64
+        assert got.size == counts.size == 0

@@ -209,3 +209,37 @@ def test_upsert_then_expunge_is_oracle_identical(
         for r, (oid, sc) in zip(got, want):
             if round(sc, 9) not in tied:
                 assert url_rank[sink[r["doc_id"]]] == oid
+
+
+def test_load_tombstones_equals_spark_read(spark, tmp_path):
+    """The driver-side pyarrow read of the tombstone dir returns what the
+    Spark read returns — a sorted int64 array, or None for no ids — on an
+    empty and on non-empty tombstone sets (`.crc`/`_SUCCESS` files beside
+    the parquet part are skipped, as Spark skips them)."""
+    import numpy as np
+
+    from colbert_spark.index.build import commit_json
+    from colbert_spark.index.delete import load_tombstones
+
+    d = str(tmp_path)
+    commit_json(os.path.join(d, "stats.json"), {"N": 1000})
+    assert load_tombstones(d, {"N": 1000}) is None  # nothing deleted yet
+
+    def spark_read(stats):
+        rows = spark.read.parquet(os.path.join(d, stats["tomb_dir"])).collect()
+        if not rows:
+            return None
+        return np.array(sorted(r["doc_id"] for r in rows), dtype=np.int64)
+
+    for ids in ([], [977, 3, 500, 41], [12, 3, 999]):
+        stats = delete_docs(
+            spark, d, spark.createDataFrame([(i,) for i in ids], "doc_id long")
+        )
+        got, want = load_tombstones(d, stats), spark_read(stats)
+        names = os.listdir(os.path.join(d, stats["tomb_dir"]))
+        assert any(n.startswith((".", "_")) for n in names)
+        if want is None:
+            assert got is None and not ids
+        else:
+            assert got.dtype == np.int64
+            assert got.tolist() == want.tolist() == sorted(set(want.tolist()))

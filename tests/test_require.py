@@ -14,7 +14,11 @@ from colbert_spark.query.wand import IndexSearcher
 K = 10
 
 # (qid, question, require, exclude): exercises singleton MUST, comma
-# OR-groups, multi-group conjunction, MUST+MUST_NOT, and a dead OOV group
+# OR-groups, multi-group conjunction, MUST+MUST_NOT, and a dead OOV group.
+# The head terms above are in almost every doc of the tiny corpus, so a
+# dropped require mask would go unseen; the last two require rare terms
+# (term01573: docs 9, 335, 984 — three buckets — and term01475 / term01336,
+# three docs each), so only the mask keeps the head-term matches out.
 CASES = [
     (0, "term00000 term00003", "term00003", None),
     (1, "term00001 term00002", "term00001 term00002", None),
@@ -22,6 +26,8 @@ CASES = [
     (3, "term00000 term00005", "term00005", "term00009"),
     (4, "term00000", "zzznotfound", None),  # dead group → no rows
     (5, "term00002", "term00004,zzznotfound", None),  # OOV alternative ok
+    (6, "term00000 term00001", "term01573", None),
+    (7, "term00002", "term01475,term01336", None),
 ]
 
 

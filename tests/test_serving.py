@@ -528,38 +528,56 @@ def test_point_empty_exits_return_canonical_frame(spark, sidx):
         fb.close()
 
 
+def _entry_bytes(cols: dict) -> int:
+    """A block-LRU entry's byte rule: the arrays' nbytes plus the payloads'
+    byte lengths."""
+    return sum(v.nbytes for v in cols.values()) + sum(
+        len(x) for v in cols.values() if v.dtype == object for x in v
+    )
+
+
 def test_split_blocks_matches_mask_slice():
-    """The per-term split of a collected block table equals a boolean mask
-    slice per term — row order, dtypes, index and byte count — on rows
-    whose terms interleave."""
+    """The per-term split of one block read (numpy columns sorted by
+    (term_id, bucket, first_doc), as `SnapshotReader.blocks` returns them)
+    equals a boolean mask slice per term — row order, per-column dtype and
+    byte count — and each entry owns its arrays."""
     rng = np.random.default_rng(7)
     n = 400
-    pdf = pd.DataFrame(
-        {
-            "bucket": rng.integers(0, 4, n).astype(np.int32),
-            "term_id": rng.integers(0, 40, n),
-            "first_doc": rng.integers(0, 10_000, n),
-            "max_unit": rng.random(n),
-            "doc_bytes": [bytes(rng.integers(0, 256, i % 9)) for i in range(n)],
-        }
-    )
+    cols = {
+        "bucket": rng.integers(0, 4, n).astype(np.int32),
+        "term_id": rng.integers(0, 40, n),
+        "first_doc": rng.integers(0, 10_000, n),
+        "max_unit": rng.random(n),
+        "doc_bytes": np.array(
+            [bytes(rng.integers(0, 256, i % 9)) for i in range(n)], dtype=object
+        ),
+    }
+    order = np.lexsort((cols["first_doc"], cols["bucket"], cols["term_id"]))
+    cols = {c: v[order] for c, v in cols.items()}
     tids = [int(t) for t in rng.permutation(45)]  # 40..44 have no rows
-    for table in (pdf, pdf.iloc[:0]):  # a collect may return no rows
+    empty = {c: v[:0] for c, v in cols.items()}  # a read may return no rows
+    for table in (cols, empty):
         out = _split_blocks(table, tids)
         assert list(out) == tids
         for t in tids:
-            want = table[table["term_id"] == t].reset_index(drop=True)
+            mask = table["term_id"] == t
             sub, nb = out[t]
-            pd.testing.assert_frame_equal(sub, want, check_index_type=True)
-            assert nb == int(want.memory_usage(deep=True).sum())
+            assert list(sub) == list(table)
+            for c, v in table.items():
+                assert sub[c].dtype == v.dtype, c
+                assert sub[c].tolist() == v[mask].tolist(), (t, c)
+                assert sub[c].base is None  # a copy, not a view of the read
+            assert nb == _entry_bytes({c: v[mask] for c, v in table.items()})
 
 
 def test_prefetch_point_frames_match_mask_slice(spark, sidx):
     """prefetch_point installs, per term, exactly the rows a boolean mask
     slice of the Spark-collected block table gives, in (bucket, first_doc)
-    order, with their byte counts. (The reference is sorted because a
-    collect's row order is Spark's partition order; the snapshot reader's
-    frames are sorted by (term_id, bucket, first_doc).)"""
+    order, as numpy columns with Spark's dtypes and the entry byte rule;
+    `_block_cache_bytes` is the sum of the entries' bytes. (The reference
+    is sorted because a collect's row order is Spark's partition order;
+    the snapshot reader's rows are sorted by (term_id, bucket,
+    first_doc).)"""
     d, _, _ = sidx
     s = IndexSearcher(spark, d).warm()
     try:
@@ -577,8 +595,13 @@ def test_prefetch_point_frames_match_mask_slice(spark, sidx):
                 .sort_values(["bucket", "first_doc"])
                 .reset_index(drop=True)
             )
-            pd.testing.assert_frame_equal(sub, want, check_index_type=True)
-            assert nb == int(want.memory_usage(deep=True).sum())
+            assert list(sub) == BLOCK_COLS
+            assert all(isinstance(v, np.ndarray) for v in sub.values())
+            for c in BLOCK_COLS:
+                assert sub[c].dtype == want[c].dtype, c
+                # Spark hands binary back as bytearray; == compares contents
+                assert sub[c].tolist() == want[c].tolist(), (t, c)
+            assert nb == _entry_bytes(sub)
             total += nb
         assert s._block_cache_bytes == total
     finally:
@@ -980,5 +1003,113 @@ def test_point_answer_never_aliases_cached_arrays(spark, sidx):
             first["score"].to_numpy()[:] = -1.0
             assert (first["doc_id"] == -1).all()  # the mutation landed
             pd.testing.assert_frame_equal(s.search_point("term00003", k=k), want)
+    finally:
+        s.close()
+
+
+def _encoded_term_blocks(rng, n_docs, block_sizes, lo, idf, prefixed):
+    """A `_TermBlocks` over `n_docs` random docs from [lo, lo + 5000), cut
+    into blocks of `block_sizes` and handed over in shuffled row order."""
+    from colbert_spark.index.codec import delta_encode, encode_block_payloads, vb_encode
+    from colbert_spark.query.wand import _TermBlocks
+
+    docs = np.sort(rng.choice(5000, n_docs, replace=False)) + lo
+    tfs = rng.integers(1, 6, n_docs)
+    dls = rng.integers(5, 400, n_docs)
+    ends = np.cumsum(block_sizes)
+    starts = ends - block_sizes
+    deltas = np.concatenate(
+        [delta_encode(docs[a:z]) for a, z in zip(starts, ends)]
+    )
+
+    def enc(v):
+        if prefixed:
+            return encode_block_payloads(v, starts, ends)
+        return [vb_encode(v[a:z]) for a, z in zip(starts, ends)]
+
+    cols = {
+        "first_doc": docs[starts],
+        "last_doc": docs[ends - 1],
+        "max_unit": rng.random(len(starts)),
+        "doc_bytes": np.array(enc(deltas), dtype=object),
+        "tf_bytes": np.array(enc(tfs), dtype=object),
+        "dl_bytes": np.array(enc(dls), dtype=object),
+    }
+    order = rng.permutation(len(starts))
+    return _TermBlocks({c: v[order] for c, v in cols.items()}, idf, prefixed)
+
+
+def test_decode_terms_matches_per_block_decode():
+    """`_decode_terms` over several `_TermBlocks` — one-block terms, many
+    blocks, one term in several buckets, v2 and v3 payloads — sets each
+    term's (docs, units) == the per-block decode, concatenated in
+    first_doc order, then `_bm25`; `full()` goes through the same
+    decoder."""
+    from colbert_spark.index.codec import decode_block
+    from colbert_spark.query.wand import _bm25, _decode_terms
+
+    k1, b, avgdl = 1.2, 0.75, 180.0
+    rng = np.random.default_rng(3)
+    for prefixed in (True, False):
+        tbs = [
+            _encoded_term_blocks(rng, 1, [1], 0, 0.3, prefixed),
+            _encoded_term_blocks(rng, 128, [128], 0, 1.7, prefixed),
+            _encoded_term_blocks(rng, 700, [128] * 5 + [60], 0, 2.9, prefixed),
+            # the same term in later buckets
+            _encoded_term_blocks(rng, 300, [128, 128, 44], 5000, 2.9, prefixed),
+            _encoded_term_blocks(rng, 5, [2, 3], 10_000, 2.9, prefixed),
+        ]
+        want = []
+        for tb in tbs:
+            order = np.argsort(tb.firsts, kind="stable")
+            parts = [
+                [decode_block(tb.rows[c][i], prefixed) for i in order]
+                for c in range(3)
+            ]
+            docs = np.concatenate([np.cumsum(p) for p in parts[0]])
+            tfs, dls = np.concatenate(parts[1]), np.concatenate(parts[2])
+            want.append((docs, _bm25(tfs, dls, tb.idf, k1, b, avgdl)))
+        _decode_terms(tbs, k1, b, avgdl)
+        for tb, (docs, units) in zip(tbs, want):
+            assert tb._full[0].dtype == np.int64
+            assert tb._full[0].tolist() == docs.tolist()
+            assert (tb._full[1] == units).all()
+            tb._full = None
+            got = tb.full(k1, b, avgdl)
+            assert got[0].tolist() == docs.tolist() and (got[1] == units).all()
+
+
+def test_traced_names_exist_and_search_point_calls_them(spark, sidx, monkeypatch):
+    """perfbench's tracer swaps module attributes by name (`getattr`, then
+    `setattr`), so the names it wraps must stay module-level, and
+    `search_point` must call the tokenizer and the analyzer through those
+    attributes or a traced run loses their spans."""
+    from collections import Counter
+
+    from colbert_spark.functions import analyzer
+    from colbert_spark.query import wand
+
+    for module, name in (
+        (wand, "py_tokenize"), (wand, "decode_block"), (analyzer, "py_analyze"),
+    ):
+        assert callable(getattr(module, name)), name
+    calls = Counter()
+
+    def count(module, name):
+        real = getattr(module, name)
+
+        def counted(*args, **kwargs):
+            calls[name] += 1
+            return real(*args, **kwargs)
+
+        monkeypatch.setattr(module, name, counted)
+
+    count(wand, "py_tokenize")
+    count(analyzer, "py_analyze")
+    d, _, _ = sidx
+    s = IndexSearcher(spark, d)
+    try:
+        assert len(s.search_point("term00001 term00002", k=K)) > 0
+        assert calls["py_tokenize"] >= 1 and calls["py_analyze"] >= 1
     finally:
         s.close()
